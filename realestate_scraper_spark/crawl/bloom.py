@@ -11,13 +11,15 @@ URLs"):
   domain-salt keys each shard is ~12 MB, and a fetch partition only ever
   consults its *own* shard (frontier is hash-partitioned by the same key), so
   the executor-resident working set stays tiny.
-- shards are built distributed (``groupBy(shard).applyInPandas`` — each group
-  builds its bitmap JVM→Arrow→numpy), OR-merged per shard driver-side only
-  across appends, broadcast as a dict of numpy bitmaps.
-- **false positives never drop URLs**: the Bloom is a prefilter that admits
-  "definitely-new" rows cheaply; "maybe-seen" rows go through the exact
-  anti-join backstop (crawl/frontier.py). The filter trades a small amount of
-  anti-join traffic for skipping the shuffle on the (dominant) new-URL mass.
+- wholesale builds (``build``: resume without a snapshot, eviction rebuilds)
+  run distributed (``groupBy(shard).applyInPandas`` — each group builds its
+  bitmap JVM→Arrow→numpy); the crawl round loop grows the driver filter
+  in place with ``add_local`` from the round's collected new-key hashes.
+- **false positives never drop URLs**: ``filter_maybe_seen`` only ever
+  admits "definitely-new" rows without the exact check; "maybe-seen" rows
+  go through the exact anti-join (crawl/frontier.py). The crawl round loop
+  sends every candidate through the exact check, so there the filter is
+  state for ``resume`` and ``evict_seen``, not a per-round gate.
 - snapshots serialize to ``.npz`` per checkpoint round (north_rule:
   "resumable from checkpoint with … Bloom snapshots").
 
@@ -38,7 +40,7 @@ from collections.abc import Iterable
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -150,40 +152,6 @@ class ShardedBloom:
         )
         self.shards.setdefault(shard_key, BloomShard(m, k)).add_hashes(arr)
 
-    @staticmethod
-    def collect_hash_deltas(
-        df: DataFrame,
-        key_col: str = "url_hash64",
-        shard_col: str = "domain_salt",
-    ) -> dict[str, np.ndarray]:
-        """Per-shard raw key hashes of a round's insert delta, built
-        distributed (one Arrow group per shard, hashes packed to bytes) and
-        collected as O(new URLs × 8 B) — the transport for
-        :class:`BloomBroadcastChain` deltas. At 10^10 seen URLs the full
-        filter is ~GBs; a round's delta is its new-key hashes, typically
-        10^3-10^6 × smaller — that asymmetry is the whole point."""
-
-        def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "shard": [pdf[shard_col].iloc[0]],
-                    "hashes": [
-                        pdf[key_col].to_numpy(dtype=np.int64).tobytes()
-                    ],
-                }
-            )
-
-        rows = (
-            df.select(shard_col, key_col)
-            .groupBy(shard_col)
-            .applyInPandas(_pack, schema="shard string, hashes binary")
-            .collect()
-        )
-        return {
-            r["shard"]: np.frombuffer(bytes(r["hashes"]), dtype=np.int64)
-            for r in rows
-        }
-
     # ----------------------------------------------------------------- test
     def filter_maybe_seen(
         self,
@@ -249,142 +217,3 @@ class ShardedBloom:
         for i, key in enumerate(keys):
             shards[str(key)] = BloomShard(int(mk[i][0]), int(mk[i][1]), z[f"bits_{i}"].copy())
         return cls(shards, expected_per_shard, fpp)
-
-
-# --------------------------------------------------------------------------
-# Incremental broadcast chain
-# --------------------------------------------------------------------------
-
-# Executor-process-global cumulative filters, keyed by chain id. A python
-# worker folds each new delta into its cached cumulative ShardedBloom exactly
-# once; older deltas' broadcast values are already resident in the worker's
-# broadcast registry, so a round costs each worker ONE small unpickle
-# (O(new URLs) bytes) + a vectorized add_hashes — never a re-read of the
-# whole filter. Bounded: tests may run several engines per worker, so a few
-# live chains are kept before evicting.
-_CHAIN_MEMO: dict[str, dict] = {}
-_CHAIN_MEMO_MAX = 4
-
-
-def _chain_shards(chain_id: str, handles: tuple) -> dict[str, BloomShard]:
-    st = _CHAIN_MEMO.get(chain_id)
-    if st is None:
-        if len(_CHAIN_MEMO) >= _CHAIN_MEMO_MAX:
-            _CHAIN_MEMO.clear()
-        st = _CHAIN_MEMO[chain_id] = {"n": 0, "shards": {}}
-    shards: dict[str, BloomShard] = st["shards"]
-    for h in handles[st["n"]:]:
-        payload = h.value
-        if payload[0] == "full":
-            for key, (m, k, bits) in payload[1].items():
-                arr = np.frombuffer(bits, dtype=np.uint64)
-                sh = shards.get(key)
-                if sh is None:
-                    shards[key] = BloomShard(m, k, arr.copy())
-                else:
-                    sh.bits |= arr
-        else:  # ("hashes", m, k, {shard: int64 ndarray})
-            _, m, k, deltas = payload
-            for key, arr in deltas.items():
-                shards.setdefault(key, BloomShard(m, k)).add_hashes(arr)
-    st["n"] = len(handles)
-    return shards
-
-
-class BloomBroadcastChain:
-    """Executor-side view of a growing :class:`ShardedBloom` as an append-only
-    broadcast chain: one ``full`` broadcast per wholesale (re)build — seed,
-    resume, eviction — plus one tiny ``hashes`` broadcast per crawl round.
-
-    Why: re-broadcasting the merged filter every round ships O(seen URLs)
-    bits to every python worker every round (measured in the r6 depth probe
-    as ~0.25 s of per-task wait in the insert stage at local[16], growing
-    with the filter). The chain ships O(new URLs) per round; workers keep a
-    cumulative filter in ``_CHAIN_MEMO`` and fold each delta in once.
-
-    Duck-types the prefilter surface the frontier path consumes
-    (``.shards`` truthiness + ``filter_maybe_seen``), so
-    ``classify_and_key_links`` / ``anti_join_seen`` take it in place of the
-    driver's ShardedBloom. NOT used for the cuckoo prefilter: deletable
-    filters are not append-only (a delete cannot be expressed as a chain
-    entry), so the cuckoo path keeps per-round full broadcasts and the
-    engine resets this chain wholesale after any eviction.
-    """
-
-    def __init__(self, spark: SparkSession, expected_per_shard: int, fpp: float):
-        import uuid
-
-        self.spark = spark
-        self.expected_per_shard = expected_per_shard
-        self.fpp = fpp
-        self._uid = uuid.uuid4().hex
-        self._gen = 0
-        self._handles: list = []
-        self._keys: set[str] = set()
-
-    @property
-    def chain_id(self) -> str:
-        return f"{self._uid}:{self._gen}"
-
-    @property
-    def shards(self) -> set[str]:
-        """Shard keys with content — truthy iff the chain can veto anything
-        (same contract as ShardedBloom.shards for the is-empty checks)."""
-        return self._keys
-
-    def reset(self, filt: ShardedBloom) -> None:
-        """Start a new generation from the driver's full filter (seed /
-        resume / post-eviction). Old generations' broadcasts are released."""
-        for h in self._handles:
-            h.unpersist()
-        self._gen += 1
-        self._handles = []
-        self._keys = set(filt.shards)
-        if filt.shards:
-            payload = (
-                "full",
-                {key: (s.m, s.k, s.bits.tobytes()) for key, s in filt.shards.items()},
-            )
-            self._handles.append(self.spark.sparkContext.broadcast(payload))
-
-    def append_hashes(self, deltas: dict[str, np.ndarray]) -> None:
-        """Broadcast one round's new-key hashes (from collect_hash_deltas)."""
-        if not deltas:
-            return
-        m, k = _params(self.expected_per_shard, self.fpp)
-        payload = (
-            "hashes",
-            m,
-            k,
-            {key: np.asarray(arr, dtype=np.int64) for key, arr in deltas.items()},
-        )
-        self._keys.update(deltas)
-        self._handles.append(self.spark.sparkContext.broadcast(payload))
-
-    def filter_maybe_seen(
-        self,
-        df: DataFrame,
-        key_col: str = "url_hash64",
-        shard_col: str = "domain_salt",
-        out_col: str = "maybe_seen",
-    ) -> DataFrame:
-        """Same contract as ShardedBloom.filter_maybe_seen, evaluated against
-        the worker-cached cumulative filter."""
-        chain_id = self.chain_id
-        handles = tuple(self._handles)
-
-        @F.pandas_udf("boolean")
-        def _maybe(h64: pd.Series, shard: pd.Series) -> pd.Series:
-            shards = _chain_shards(chain_id, handles)
-            out = np.zeros(len(h64), dtype=bool)
-            hv = h64.to_numpy()
-            sv = shard.to_numpy()
-            for key in pd.unique(sv):
-                sh = shards.get(key)
-                if sh is None:
-                    continue
-                mask = sv == key
-                out[mask] = sh.maybe_contains(hv[mask])
-            return pd.Series(out)
-
-        return df.withColumn(out_col, _maybe(F.col(key_col), F.col(shard_col)))

@@ -12,9 +12,10 @@ a cuckoo filter can — ``CrawlEngine(..., prefilter="cuckoo")`` swaps
 numpy: fingerprint f = 16 low bits of the key (never 0); bucket
 i1 = h mod nb, i2 = i1 XOR (fp * 0x5bd1e995) mod nb.
 
-Why refcounts: the per-round anti-join (crawl/frontier.anti_join_seen)
-admits ``maybe_seen = false`` rows WITHOUT an exact store check — sound only
-if the prefilter can never read false-negative for an inserted key. Two
+Why refcounts: an anti-join gated by the prefilter
+(crawl/frontier.anti_join_seen with a filter) admits ``maybe_seen = false``
+rows WITHOUT an exact store check — sound only if the prefilter can never
+read false-negative for an inserted key. Two
 distinct URLs can collide on the same (bucket-pair, fingerprint); a plain
 cuckoo delete of one would erase the shared entry and turn the other URL
 into a false negative → duplicate fetch. Here each (bucket, fp) slot
@@ -283,12 +284,12 @@ def _from_blobs(nb: int, table: bytes, counts: bytes, writable: bool = True) -> 
 
 class ShardedCuckoo:
     """dict[domain_salt → CuckooFilter] — the deletable twin of
-    bloom.ShardedBloom, duck-type compatible with every engine call site
-    (build / merge / add_local / filter_maybe_seen / save / load) plus
-    ``delete_df`` for the eviction path.
+    bloom.ShardedBloom, duck-type compatible with it (build / merge /
+    add_local / filter_maybe_seen / save / load) plus ``delete_df`` for the
+    eviction path.
 
     All shards share one table size (derived from ``expected_per_shard``) so
-    per-round delta filters merge into the run filter by fingerprint
+    separately built filters merge into the run filter by fingerprint
     re-homing. ``fpp`` is accepted for interface parity; the (2,4)-cuckoo
     false-positive rate is ≈ 2·SLOTS/2^16 ≈ 0.012 %, far below the Bloom's
     1 % default.

@@ -5,12 +5,12 @@ One round =
      + all pending offer/investment pages; rows under a Retry-After hold are
      excluded until their round arrives),
   2. politeness-governed fetch (mapInPandas, partitioned by domain_salt),
-  3. listings → link extraction → classify → canonicalize → Bloom+anti-join
-     dedupe (O1) → new PENDING frontier rows,
+  3. listings → link extraction → classify → canonicalize → exact anti-join
+     dedupe against the seen store (O1) → new PENDING frontier rows,
   4. offers → parse cascade → refine (expressions) → offers/photos/quarantine
      appends,
-  5. frontier DELTA appends (inserts + status updates), checkpoint, Bloom
-     shard-delta merge, metrics.
+  5. frontier DELTA appends (inserts + status updates), checkpoint, driver
+     prefilter update from the round's new-key hashes, metrics.
 
 Termination (ST2): per-source done when no pending pages remain (no_links),
 two consecutive listing pages yield no new offer URLs (no_new, A5 —
@@ -26,9 +26,9 @@ never collected to the driver at any point in the engine's lifecycle.
 Scale discipline (the parts that must survive 10^10 frontier rows):
 - **No O(frontier) driver transfer.** Driver-side state is counters, the
   per-source pending listing-page sets (bounded by pagination depth — the
-  same metadata the reference keeps as ``last_page_done``), and Bloom
-  bitmaps (~KB/shard). Every collect() in this file is an aggregate or a
-  metadata-scale set, never frontier rows.
+  same metadata the reference keeps as ``last_page_done``), and the
+  prefilter (Bloom bitmaps or cuckoo tables, ~KB/shard). Every collect() in
+  this file is an aggregate or a metadata-scale set, never frontier rows.
 - **O(batch) table writes per round.** The durable frontier is a sequence of
   delta snapshots: `insert` deltas (new URLs) and `update` deltas (status
   transitions, full rows). ``frontier()`` reconciles latest-wins with a
@@ -39,11 +39,18 @@ Scale discipline (the parts that must survive 10^10 frontier rows):
   unions, localCheckpoint()ed so the plan never grows with round count.
 - **The seen set is a BUCKETED table** (crawl/seenstore.py): the per-round
   anti-join needs no exchange or sort on the seen side (only the small
-  maybe-seen candidate batch shuffles), and compaction every K appends keeps
-  the file count O(K), never O(rounds). The exact anti-join backstop behind
-  the Bloom prefilter; nothing is collected.
-- **Bloom deltas build distributed** (one Arrow group per domain-salt shard,
-  bloom.py) and OR-merge driver-side as ~KB bitmaps.
+  candidate batch shuffles), and compaction every K appends keeps the file
+  count O(K), never O(rounds). Every candidate takes this exact check;
+  nothing is collected.
+- **Only the fused fetch+parse runs on Python workers.** On this PySpark
+  4.1.2 / CPython 3.11 stack a Python task costs ~0.2 CPU-s of worker set-up
+  on its own, whatever its row count, so round bookkeeping stays in the
+  JVM: the round's new-key hashes and counters come back from one
+  ``collect_list`` aggregate (O(new URLs × 8 B)), and the driver prefilter
+  (``self.bloom``, Bloom or cuckoo) absorbs them with ``add_local``. The
+  prefilter is snapshotted to ``bloom.npz`` every round and serves
+  ``resume`` and ``evict_seen``; the round loop itself does not consult it,
+  because the anti-join hashes every seen bucket either way.
 
 The driver-side loop is the one intentionally imperative piece (the crawl is
 inherently iterative — same as the reference's `while True` pagination,
@@ -65,7 +72,7 @@ from realestate_scraper_spark.crawl import fetch as fetch_mod
 from realestate_scraper_spark.crawl import frontier as frontier_mod
 from realestate_scraper_spark.crawl import parse as parse_mod
 from realestate_scraper_spark.crawl import refine as refine_mod
-from realestate_scraper_spark.crawl.bloom import BloomBroadcastChain, ShardedBloom
+from realestate_scraper_spark.crawl.bloom import ShardedBloom
 from realestate_scraper_spark.crawl.seenstore import BucketedSeenStore
 from realestate_scraper_spark.functions.codegen import ref_lit
 from realestate_scraper_spark.functions.urlnorm import url_hash32
@@ -106,50 +113,33 @@ def is_single_jvm_master(master: str) -> bool:
 
 
 def _collect_insert_deltas(df: DataFrame):
-    """ONE job over a round's insert delta returning BOTH driver products:
+    """ONE JVM aggregate over a round's insert delta returning BOTH driver
+    products:
 
-    - per-(domain#salt) new-key hash arrays — the Bloom broadcast-chain
-      transport, packed to bytes executor-side (O(new URLs × 8 B) collected,
-      same wire format as ``ShardedBloom.collect_hash_deltas``);
+    - per-(domain#salt) new-key hash arrays that the driver prefilter
+      absorbs with ``add_local`` (O(new URLs × 8 B) collected);
     - the (source, kind, page_idx, n) counter rows that feed the driver's
       metadata-scale progress tracking (``_track_new_agg``).
 
-    These used to be two jobs over the same tiny snapshot every round; the
-    grouped Arrow pack produces both in one pass (one extra group key per
-    (source, kind, page) combination within a shard — metadata-scale)."""
+    One row per (shard, source, kind, page) group, so the collect stays
+    metadata-scale in rows. A plain ``collect_list`` keeps the job off
+    Python workers: on PySpark 4.1.2 / CPython 3.11 a Python task costs
+    ~0.2 CPU-s of worker set-up whatever its row count, which made the
+    former Arrow pack the costliest part of this job."""
     import numpy as np
-    import pandas as pd
-
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "shard": [pdf["domain_salt"].iloc[0]],
-                "source": [pdf["source"].iloc[0]],
-                "kind": [pdf["kind"].iloc[0]],
-                "page_idx": [pdf["page_idx"].iloc[0]],
-                "n": [len(pdf)],
-                "hashes": [pdf["url_hash64"].to_numpy(dtype=np.int64).tobytes()],
-            }
-        )
 
     rows = (
-        df.select("domain_salt", "source", "kind", "page_idx", "url_hash64")
-        .groupBy("domain_salt", "source", "kind", "page_idx")
-        .applyInPandas(
-            _pack,
-            schema=(
-                "shard string, source string, kind string, page_idx int, "
-                "n long, hashes binary"
-            ),
+        df.groupBy("domain_salt", "source", "kind", "page_idx")
+        .agg(
+            F.count("*").alias("n"),
+            F.collect_list("url_hash64").alias("hashes"),
         )
         .collect()
     )
     chunks: dict[str, list] = defaultdict(list)
     agg = []
     for r in rows:
-        chunks[r["shard"]].append(
-            np.frombuffer(bytes(r["hashes"]), dtype=np.int64)
-        )
+        chunks[r["domain_salt"]].append(np.array(r["hashes"], dtype=np.int64))
         agg.append(
             {
                 "source": r["source"],
@@ -308,18 +298,6 @@ class CrawlEngine:
             else {}
         )
         self.bloom = self._pf_cls(fpp=bloom_fpp, **pf_kw)
-        # Incremental prefilter broadcast (bloom only): per-round deltas ship
-        # raw new-key hashes, O(new URLs) bytes, instead of re-broadcasting
-        # the whole O(seen URLs) filter to every python worker every round.
-        # The cuckoo prefilter is deletable (not append-only), so it keeps
-        # per-round full broadcasts; _chain_reset() is a no-op there.
-        self._bloom_chain = (
-            BloomBroadcastChain(
-                spark, self.bloom.expected_per_shard, self.bloom.fpp
-            )
-            if self._pf_cls is ShardedBloom
-            else None
-        )
         # populated by evict_seen(): {"evicted", "affected_shards",
         # "total_shards", "rebuilt_rows"} — the O(affected shards) rebuild
         # evidence (tests + eviction bench read it)
@@ -490,20 +468,6 @@ class CrawlEngine:
         with self._phase(name):
             return fn(*args, **kwargs)
 
-    # -------------------------------------------------- prefilter broadcast
-    def _prefilter(self):
-        """What the frontier insert path tests membership against: the
-        incremental broadcast chain when the prefilter is a Bloom, else the
-        driver filter itself (cuckoo — full broadcast per round)."""
-        return self._bloom_chain if self._bloom_chain is not None else self.bloom
-
-    def _chain_reset(self) -> None:
-        """Re-seed the broadcast chain from the driver's full filter — called
-        after every WHOLESALE (re)build of self.bloom (seed / resume /
-        eviction); per-round growth goes through append_hashes instead."""
-        if self._bloom_chain is not None:
-            self._bloom_chain.reset(self.bloom)
-
     # ------------------------------------------------------------- seeding
     def seed(self, seeds: list[tuple[str, str]]) -> None:
         if self.robots_rules is None:
@@ -512,8 +476,8 @@ class CrawlEngine:
         frontier_mod.assert_frontier_schema(df)
         # The seed frame is a driver-local literal, so the three output
         # steps below — durable seed snapshot, bucketed seen store, and the
-        # ONE metadata-scale collect that feeds the prefilter, the counters
-        # and the broadcast chain — share no data dependency and run as
+        # ONE metadata-scale collect that feeds the prefilter and the
+        # counters — share no data dependency and run as
         # concurrent jobs (each recomputes the trivial local plan). The
         # serialized form paid ~1 s of first-job latency per step on a
         # fresh session. expected-per-shard is preserved (a fresh
@@ -553,7 +517,6 @@ class CrawlEngine:
             counts[(r["source"], r["kind"], r["page_idx"])] += 1
         for salt, hashes in by_salt.items():
             self.bloom.add_local(salt, hashes)
-        self._chain_reset()
         self._track_new_agg(
             [
                 {"source": s, "kind": k, "page_idx": p, "n": n}
@@ -648,7 +611,6 @@ class CrawlEngine:
             eng.bloom = eng._pf_cls.load(eng.bloom_path, fpp=eng.bloom_fpp)
         elif fr is not None:
             eng.bloom = eng._pf_cls.build(fr, fpp=eng.bloom_fpp)
-        eng._chain_reset()
         return eng
 
     # ---------------------------------------------------------- round loop
@@ -865,9 +827,6 @@ class CrawlEngine:
                         # reads definitely-new, exactly right
                         self.bloom.shards.pop(s, None)
         self.bloom.save(self.bloom_path)
-        # eviction is exactly the mutation an append-only chain cannot
-        # express — re-seed the broadcast chain from the rebuilt filter
-        self._chain_reset()
         self.last_evict_stats = {
             "evicted": n,
             "affected_shards": len(salts),
@@ -1062,24 +1021,18 @@ class CrawlEngine:
         with self._phase("links_plan"):
             # Single-shuffle, SINGLE-BRANCH insert path: classify exprs →
             # ONE exchange on url_canon aligned to the seen store's bucket
-            # count → dedup agg (SO5) → one conditional LeftAnti against
-            # the bucketed seen scan (prefilter verdict as a join-condition
-            # conjunct; shuffle-hash, so the seen side is neither sorted
-            # nor broadcast) → direct write at the join's partitioning.
-            # History: the r4 path paid three candidate shuffles per round
-            # (window sort, anti-join re-shuffle, append repartition); its
-            # replacement's fresh/maybe split + union then made Catalyst
-            # run the whole candidate pipeline TWICE per round — the r5
-            # depth probe measured that duplication as the largest
-            # core-invariant slice of the loop. Both are gone.
+            # count → dedup agg (SO5) → LeftAnti against the bucketed seen
+            # scan (shuffle-hash, so the seen side is neither sorted nor
+            # broadcast) → direct write at the join's partitioning. Every
+            # candidate takes the exact check: the join's build side hashes
+            # every seen bucket either way, so a prefilter verdict here
+            # would save no read and no hash build, only add an Arrow UDF
+            # stage of Python tasks to every round.
             candidates = frontier_mod.classify_and_key_links(
                 links, self.n_salts,
                 dedup_partitions=self.seen_store.n_buckets,
-                bloom=self._prefilter(),
             )
-            fresh = frontier_mod.anti_join_seen(
-                candidates, self._seen(), self._prefilter()
-            )
+            fresh = frontier_mod.anti_join_seen(candidates, self._seen())
 
         # ---- ACTION 2: insert delta (O(new rows)) + update delta (status
         # transitions for this round's batch). The two appends touch
@@ -1116,36 +1069,17 @@ class CrawlEngine:
                 self.seen_store.append(new_df)
 
         def _deltas():
-            # Bloom path: ONE job returns BOTH driver-side products of the
-            # insert delta — the per-shard new-key hashes (chain transport,
-            # O(new URLs × 8 B)) and the (source, kind, page_idx, n)
-            # counters. These were two separate jobs over the same tiny
-            # snapshot; merging them removes one job submission per round.
             with self._phase("insert_deltas"):
                 return _collect_insert_deltas(new_df)
 
-        def _bloom():
-            # Cuckoo path: bitmap-table delta, OR-merged driver-side and
-            # re-broadcast in full next round (deletable ⇒ not chainable).
-            with self._phase("bloom_build"):
-                return self._pf_cls.build(
-                    new_df,
-                    expected_per_shard=self.bloom.expected_per_shard,
-                    fpp=self.bloom_fpp,
-                )
-
-        def _agg():
-            with self._phase("new_rows_agg"):
-                return self._new_rows_agg(new_df)
-
-        # ---- all five round-output jobs overlap: insert ∥ update first,
-        # then (seen table ∥ Bloom bitmaps ∥ driver counters) over the
+        # ---- the round-output jobs overlap: insert ∥ update first, then
+        # (seen table ∥ prefilter deltas + driver counters) over the
         # insert delta while the update may still be writing. ~3-5 s/round
         # of serialized small-job latency at depth-bench load becomes the
         # max() of the chains.
         new_n = 0
         new_offer_counts: dict[str, int] = defaultdict(int)
-        with ThreadPoolExecutor(max_workers=6) as pool:
+        with ThreadPoolExecutor(max_workers=5) as pool:
             ins_fut = pool.submit(_ins)
             upd_fut = pool.submit(_upd)
 
@@ -1175,14 +1109,10 @@ class CrawlEngine:
                 if ins_n
                 else None
             )
-            seen_fut = deltas_fut = bloom_fut = agg_fut = None
+            seen_fut = deltas_fut = None
             if new_df is not None:
                 seen_fut = pool.submit(_seen)
-                if self._bloom_chain is not None:
-                    deltas_fut = pool.submit(_deltas)
-                else:
-                    bloom_fut = pool.submit(_bloom)
-                    agg_fut = pool.submit(_agg)
+                deltas_fut = pool.submit(_deltas)
 
             if sum_fut is not None:
                 summary = sum_fut.result()
@@ -1212,14 +1142,9 @@ class CrawlEngine:
 
             if new_df is not None:
                 seen_fut.result()
-                if deltas_fut is not None:
-                    delta, agg = deltas_fut.result()
-                    for shard_key, arr in delta.items():
-                        self.bloom.add_local(shard_key, arr)
-                    self._bloom_chain.append_hashes(delta)
-                else:
-                    self.bloom.merge(bloom_fut.result())
-                    agg = agg_fut.result()
+                delta, agg = deltas_fut.result()
+                for shard_key, arr in delta.items():
+                    self.bloom.add_local(shard_key, arr)
                 self._track_new_agg(agg)
                 for r in agg:
                     new_n += r["n"]
@@ -1251,8 +1176,10 @@ class CrawlEngine:
         # (the round-start eligible-counter check returns first), but if it
         # does, every output job above was a joined no-op (0-row appends)
         if batch_n == 0:
-            fetched.unpersist()
-            return False, 0, self._finalize_done()
+            if self.offer_limit is not None:
+                # deferred-join rounds unpersist at drain time instead
+                fetched.unpersist()
+            return False, 0, offers_n + self._finalize_done()
 
         # ---- next working set: O(batch) unions whose roots are all ON DISK
         # (previous checkpoint + this round's delta parquet), so the lazy
@@ -1392,8 +1319,7 @@ class CrawlEngine:
 
     def _seen(self) -> DataFrame:
         """The URL-seen set as a BUCKETED scan (url_canon only): the exact
-        backstop behind the Bloom prefilter (J4/O1) joins with no seen-side
-        exchange (crawl/seenstore.py). Durable, partition-parallel, zero
+        per-round dedup check (J4/O1) joins with no seen-side exchange (crawl/seenstore.py). Durable, partition-parallel, zero
         driver memory. On a pre-upgrade run dir (no bucketed store on disk)
         the store is rebuilt once from the frontier insert deltas."""
         if not self.seen_store.registered():

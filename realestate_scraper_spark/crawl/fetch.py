@@ -367,9 +367,8 @@ def make_fetch_parse_stage(
     computes_acc=None,
 ):
     """The fused stage: politeness-governed fetch + link extraction + offer
-    parse cascade in ONE python pass per partition (same semantics as
-    make_fetch_stage → extract_links_batches/parse_offer_batches chained,
-    equivalence-tested). Exists because materializing the fetched html
+    parse cascade in ONE python pass per partition (crawl/parse.py holds
+    the per-page parse cores). Exists because materializing the fetched html
     between stages costs a cache round-trip of the whole page corpus every
     round — the measured in-loop scale limiter."""
     from realestate_scraper_spark.crawl import parse as parse_mod

@@ -157,8 +157,10 @@ def classify_and_key_links(
     shuffles per round (window sort, anti-join re-shuffle, append
     repartition); this collapses them to one.
 
-    ``bloom``: when given (and non-empty), the Bloom ``maybe_seen`` verdict
-    is attached HERE, before the exchange. The membership test is an Arrow
+    ``bloom``: optional, and the crawl round loop passes none — there every
+    candidate takes the exact check, because the anti-join's build side
+    hashes every seen bucket either way. When given (and non-empty), the
+    prefilter's ``maybe_seen`` verdict is attached HERE, before the exchange. The membership test is an Arrow
     pandas UDF, and ``EvalPythonExec`` does not propagate its child's
     output partitioning — a post-shuffle Bloom test (the r4 shape) silently
     re-inserted an ENSURE_REQUIREMENTS exchange in front of the bucketed
@@ -258,7 +260,8 @@ def finish_new_rows(candidates: DataFrame, round_idx: int) -> DataFrame:
 def anti_join_seen(
     candidates: DataFrame, seen: DataFrame, bloom=None
 ) -> DataFrame:
-    """O1/J4: drop already-seen URLs; Bloom prefilter + exact anti-join.
+    """O1/J4: drop already-seen URLs with the exact anti-join, optionally
+    gated by a prefilter verdict (the crawl round loop passes no filter).
 
     The prefilter verdict (``maybe_seen``) gates the exact check as an extra
     conjunct INSIDE one LeftAnti join condition::

@@ -1,15 +1,16 @@
-"""Parse stages — the adapter UDF surface (SURVEY.md §2.10) vectorized.
+"""Parse cores — the adapter UDF surface (SURVEY.md §2.10) vectorized.
 
-Two Arrow-batched stages replace the reference's per-URL BeautifulSoup calls:
+The fused fetch+parse stage (crawl/fetch.make_fetch_parse_stage) calls these
+per page in place of the reference's per-URL BeautifulSoup calls:
 
-- :func:`extract_links_batches` — listing HTML → (dom_idx, href) rows in DOM
-  order. DOM position is the crawl-order ``slot`` (W3): the reference yields
-  cards in document order (otodom.py:592-614). 1→many, like ``discover``.
-- :func:`parse_offer_batches` — offer HTML → raw field struct. Implements the
-  reference's merge cascade LD+JSON → ``__NEXT_DATA__`` → CSS fallback
+- ``_HREF_RE`` — listing HTML → hrefs in DOM order. DOM position is the
+  crawl-order ``slot`` (W3): the reference yields cards in document order
+  (otodom.py:592-614). 1→many, like ``discover``.
+- :func:`append_parsed_offer` — offer HTML → raw field values. Implements
+  the reference's merge cascade LD+JSON → ``__NEXT_DATA__`` → CSS fallback
   (otodom.py:640-653): each extractor fills only fields still missing.
 
-Everything downstream of these two UDFs (reconciliation F17/F18, bbox gate
+Everything downstream of the fused stage (reconciliation F17/F18, bbox gate
 P5, completeness gate P2, offer-id extraction F5, photo explode W1/W2) is
 pure Spark expressions — see crawl/refine.py.
 """
@@ -18,14 +19,8 @@ from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
 
 import pandas as pd
-
-LINKS_FIELDS = (
-    "source string, page_idx int, parent_url string, parent_slot int, "
-    "parent_kind string, dom_idx int, href string"
-)
 
 OFFER_FIELDS = (
     "url string, url_canon string, source string, page_idx int, slot int, "
@@ -72,41 +67,6 @@ _UPDATED_RE = re.compile(r'<span class="updated">([^<]*)</span>')
 _YEAR_RE = re.compile(r'<span class="year">(-?\d+)</span>')
 _FEATURE_RE = re.compile(r'<li class="feature">([^<]*)</li>')
 _NUM_CLEAN = re.compile(r"[\s ]")
-
-
-def extract_links_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Listing/investment pages → child links in DOM order (1→many).
-
-    Parent slot + kind travel with each link so investment children inherit
-    the card position of their investment (depth-first crawl order,
-    otodom.py:539-604)."""
-    for pdf in batches:
-        src, pidx, purl, pslot, pkind, didx, href = [], [], [], [], [], [], []
-        for s, p, u, sl, kd, html in zip(
-            pdf["source"], pdf["page_idx"], pdf["url"], pdf["slot"],
-            pdf["kind"], pdf["html"]
-        ):
-            if html is None:
-                continue
-            for i, link in enumerate(_HREF_RE.findall(html)):
-                src.append(s)
-                pidx.append(p)
-                purl.append(u)
-                pslot.append(sl)
-                pkind.append(kd)
-                didx.append(i)
-                href.append(link)
-        yield pd.DataFrame(
-            {
-                "source": pd.Series(src, dtype="object"),
-                "page_idx": pd.Series(pidx, dtype="int32"),
-                "parent_url": pd.Series(purl, dtype="object"),
-                "parent_slot": pd.Series(pslot, dtype="int32"),
-                "parent_kind": pd.Series(pkind, dtype="object"),
-                "dom_idx": pd.Series(didx, dtype="int32"),
-                "href": pd.Series(href, dtype="object"),
-            }
-        )
 
 
 # ------------------------------------------------------------ offer parse
@@ -297,8 +257,8 @@ RAW_COL_NAMES = (
 
 def append_parsed_offer(cols: dict[str, list], html: str | None) -> None:
     """Run the merge cascade on one page and append the 21 raw values to
-    ``cols`` (the per-row core shared by :func:`parse_offer_batches` and
-    the fused fetch+parse stage in crawl/fetch.py)."""
+    ``cols`` (the per-row core of the fused fetch+parse stage in
+    crawl/fetch.py)."""
     out: dict = {}
     if html is not None:
         _from_ldjson(html, out)
@@ -364,23 +324,3 @@ def raw_cols_to_series(cols: dict[str, list]) -> dict[str, pd.Series]:
         k: pd.Series(v, dtype=dtypes.get(k, "object"))
         for k, v in cols.items()
     }
-
-
-def parse_offer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Offer pages → raw field struct with the reference's merge-priority
-    cascade (LD+JSON fills first, then __NEXT_DATA__, then CSS)."""
-    for pdf in batches:
-        cols: dict[str, list] = {k: [] for k in RAW_COL_NAMES}
-        for html in pdf["html"]:
-            append_parsed_offer(cols, html)
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"],
-                "url_canon": pdf["url_canon"],
-                "source": pdf["source"],
-                "page_idx": pdf["page_idx"],
-                "slot": pdf["slot"],
-                "sub_slot": pdf["sub_slot"],
-                **raw_cols_to_series(cols),
-            }
-        )

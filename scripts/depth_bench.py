@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -30,8 +31,10 @@ WORKER = REPO / "scripts" / "depth_worker.py"
 MARKER = "## Round-loop amortization at depth"
 
 def replace_own_section(text: str, lines: list[str]) -> str:
-    """Replace ONLY this script's report section in ``text``: MARKER → the
-    next ``## `` heading (or EOF when it is last); append when absent.
+    """Replace ONLY this script's report section in ``text``: the MARKER
+    heading line → the next ``## `` heading (or EOF when it is last);
+    append when absent. MARKER counts only as a whole heading line, so a
+    prose mention of it elsewhere never starts the section.
 
     The r6 version truncated the whole file at the marker and appended,
     silently DELETING every unrelated section after it (the r6 depth
@@ -39,10 +42,11 @@ def replace_own_section(text: str, lines: list[str]) -> str:
     r6 verdict's one regression). Pinned by
     tests/test_report_sections.py."""
     block = "\n".join(lines).rstrip() + "\n"
-    if MARKER not in text:
+    m = re.search(rf"^{re.escape(MARKER)}[ \t]*$", text, re.M)
+    if m is None:
         return text.rstrip() + "\n\n" + block
-    start = text.index(MARKER)
-    nxt = text.find("\n## ", start + len(MARKER))
+    start = m.start()
+    nxt = text.find("\n## ", m.end())
     tail = "" if nxt == -1 else text[nxt + 1:]
     return (text[:start].rstrip() + "\n\n" + block + "\n" + tail).rstrip() + "\n"
 

@@ -5,7 +5,7 @@ entries)").
 
 The eviction semantics: a DONE offer URL older than the TTL is removed from
 the durable bucketed seen store AND the in-memory prefilter, so the next
-listing sweep that links it re-admits it through the Bloom/anti-join gate as
+listing sweep that links it re-admits it through the exact anti-join as
 a fresh PENDING row. The reference can only re-crawl by starting a whole run
 over a fresh DedupeSet (cli.py:128-139); at a 10^10-URL frontier the
 eviction must be surgical.
@@ -33,7 +33,7 @@ _LINK_SCHEMA = (
 def _rediscovery_candidates(spark, eng, row):
     """One link row re-linking an already-crawled offer URL (what a later
     listing sweep emits), pushed through the exact insert path the engine
-    runs per round: classify → Bloom verdict → bucketed anti-join."""
+    runs per round: classify → dedup exchange → bucketed anti-join."""
     links = spark.createDataFrame(
         [
             (
@@ -44,15 +44,10 @@ def _rediscovery_candidates(spark, eng, row):
         ],
         _LINK_SCHEMA,
     )
-    # _prefilter() is the exact object the round loop consults: the
-    # BloomBroadcastChain (reset wholesale by evict_seen) on the bloom
-    # path, the driver filter itself on the cuckoo path
-    pf = eng._prefilter()
     cands = frontier_mod.classify_and_key_links(
-        links, eng.n_salts,
-        dedup_partitions=eng.seen_store.n_buckets, bloom=pf,
+        links, eng.n_salts, dedup_partitions=eng.seen_store.n_buckets
     )
-    return frontier_mod.anti_join_seen(cands, eng._seen(), pf)
+    return frontier_mod.anti_join_seen(cands, eng._seen())
 
 
 @pytest.fixture(scope="module")

@@ -46,6 +46,21 @@ def test_replace_when_section_is_last():
     assert "OLD" not in out and "NEW" in out and "## Keep" in out
 
 
+def test_replace_ignores_prose_mention_of_marker():
+    """An earlier prose mention of the marker text is not the section
+    start; only the heading line is."""
+    text = (
+        "# T\n\n## Notes\n\n"
+        f"The depth sweep writes `{MARKER}` below.\n\nkeep me\n\n"
+        f"{MARKER}\n\nOLD\n\n## After\n\ntail\n"
+    )
+    out = replace_own_section(text, [MARKER, "", "NEW"])
+    assert "OLD" not in out and "NEW" in out
+    assert f"writes `{MARKER}` below." in out and "keep me" in out
+    assert "## After" in out and "tail" in out
+    assert out.index("keep me") < out.index("NEW") < out.index("## After")
+
+
 def test_replace_appends_when_absent():
     text = "# T\n\n## Keep\n\nx\n"
     out = replace_own_section(text, [MARKER, "", "NEW"])
