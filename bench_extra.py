@@ -24,17 +24,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
-HEADLINE = [
-    "q01_pricing_summary", "q02_coverage_join", "q05_photo_seq_window",
-    "q06_topk_per_group", "q07_state_replay", "q23_spatial_dup_join",
-    "q26_sessionize", "q30_dedup_exact", "q31_minhash_signatures",
-    "q32_minhash_band_pairs", "q34_simhash", "q39_ann_brute_topk",
-    "q40_ann_lsh_buckets", "q41_embedding_near_dup",
-]
-
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from bench import HEADLINE, _force  # noqa: E402  (bench.main() is guarded)
 
 
 def _spark():

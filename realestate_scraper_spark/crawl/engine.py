@@ -4,13 +4,14 @@ One round =
   1. take the eligible PENDING working set (ALL known pending listing pages
      + all pending offer/investment pages; rows under a Retry-After hold are
      excluded until their round arrives),
-  2. politeness-governed fetch (mapInPandas, partitioned by domain_salt),
+  2. politeness-governed fused fetch+parse (mapInPandas, partitioned by
+     domain_salt), cached and materialized by the round's fetch summary,
   3. listings → link extraction → classify → canonicalize → exact anti-join
      dedupe against the seen store (O1) → new PENDING frontier rows,
-  4. offers → parse cascade → refine (expressions) → offers/photos/quarantine
-     appends,
-  5. frontier DELTA appends (inserts + status updates), checkpoint, driver
-     prefilter update from the round's new-key hashes, metrics.
+  4. offers → parse cascade → refine (expressions) → one staged append,
+  5. frontier DELTA appends (inserts + status updates), seen-store append,
+     driver prefilter update from the round's new-key hashes; every output
+     job joined, then the prefilter snapshot, metrics and checkpoint.
 
 Termination (ST2): per-source done when no pending pages remain (no_links),
 two consecutive listing pages yield no new offer URLs (no_new, A5 —
@@ -51,6 +52,13 @@ Scale discipline (the parts that must survive 10^10 frontier rows):
   prefilter is snapshotted to ``bloom.npz`` every round and serves
   ``resume`` and ``evict_seen``; the round loop itself does not consult it,
   because the anti-join hashes every seen bucket either way.
+
+One round schedule, the same on every master: the summary aggregation
+runs first and materializes the fused cache, so the output jobs (staged,
+insert, update, then seen + deltas over the insert delta) overlap on one
+round pool over warm blocks and never recompute the Python stage; all of
+them are joined before ``bloom.npz`` and ``checkpoint.json`` are written, so
+a checkpointed round never names offers that are not yet on disk.
 
 The driver-side loop is the one intentionally imperative piece (the crawl is
 inherently iterative — same as the reference's `while True` pagination,
@@ -99,19 +107,6 @@ def _rows_under(path: str) -> int:
     return _rows_from_footers(path) if os.path.isdir(path) else 0
 
 
-def is_single_jvm_master(master: str) -> bool:
-    """True when every task thread shares the driver JVM (``local`` /
-    ``local[N]`` / ``local[N,F]``). There — and ONLY there — the
-    BlockManager's per-block get-or-compute lock makes concurrent jobs
-    racing over one uncached ``.cache()`` compute each partition exactly
-    once. On every multi-executor master (``local-cluster``, standalone,
-    YARN, k8s) that lock is executor-LOCAL: two racing jobs can compute the
-    same uncached partition on different executors, so an expensive python
-    stage behind a shared cache runs up to min(racers, executors) times.
-    The round loop keys its job-submission order off this predicate."""
-    return master == "local" or master.startswith("local[")
-
-
 def _collect_insert_deltas(df: DataFrame):
     """ONE JVM aggregate over a round's insert delta returning BOTH driver
     products:
@@ -155,13 +150,6 @@ def _collect_insert_deltas(df: DataFrame):
     return deltas, agg
 
 
-# sessions whose crawl-specific first-time costs were already pre-warmed
-# (python worker army, staged-write codegen + parquet committer) — one
-# warmup per SparkSession, not per engine, so test suites that construct
-# many engines pay it once
-_WARMED_SESSIONS: set[str] = set()
-
-
 class CrawlEngine:
     def __init__(
         self,
@@ -185,15 +173,9 @@ class CrawlEngine:
         geocode_dim: "DataFrame | None" = None,
         prefilter: str = "bloom",
         prefilter_expected_per_shard: int | None = None,
-        warmup: bool = True,
     ):
         self.spark = spark
         self.run_dir = run_dir
-        # single-JVM masters may safely RACE output jobs over the round's
-        # fused cache (compute-once is lock-guaranteed); multi-executor
-        # masters must materialize the cache first or the fused parse runs
-        # once per racing executor (see is_single_jvm_master / _one_round)
-        self._single_jvm = is_single_jvm_master(spark.sparkContext.master)
         # opt-in instrumentation: a LongAccumulator counting fused-stage
         # partition computes (duplicate-compute probe; see fetch_parse)
         self.parse_computes_acc = None
@@ -331,118 +313,6 @@ class CrawlEngine:
         # feeds scripts/depth_bench.py's fixed-cost attribution; always on
         # (two time.monotonic() calls per phase, negligible)
         self.phase_times: dict[str, float] = defaultdict(float)
-        # one worker: the staged-offers append overlaps the frontier path
-        # within a round (Spark schedules concurrent jobs from separate
-        # driver threads); a single thread keeps t_staged appends ordered
-        self._staged_pool = ThreadPoolExecutor(
-            max_workers=1, thread_name_prefix="staged"
-        )
-        # rounds whose staged append has been submitted but not yet joined
-        # (offer-limit-less runs defer the join so the write overlaps the
-        # NEXT round's fetch): [(round_idx, batch_n, future, fetched_cache)]
-        self._staged_pending: list[tuple] = []
-        # async pre-warm of the session's crawl-specific first-time costs,
-        # overlapped with seed() / round 1 (both are latency-bound driver
-        # sequences, so the executor pool is idle while they run)
-        self._warmup_thread = None
-        if warmup:
-            self._start_warmup()
-
-    # -------------------------------------------------------------- warmup
-    def _start_warmup(self) -> None:
-        import threading
-
-        app = self.spark.sparkContext.applicationId
-        if app in _WARMED_SESSIONS:
-            return
-        _WARMED_SESSIONS.add(app)
-        t = threading.Thread(
-            target=self._warmup, name="crawl-warmup", daemon=True
-        )
-        t.start()
-        self._warmup_thread = t
-
-    def _warmup(self) -> None:
-        """Best-effort pre-warm, measured against the r6 cold profile where
-        seed (6 s) + round 1 (8 s) were two-thirds of a 4-round crawl:
-
-        1. fork + import the python worker army (one ``mapInPandas`` task
-           per core — round 1's fused fetch stage otherwise pays ~1 s/worker
-           of fork+import latency on its first batch),
-        2. compile the staged write path by running a 1-row TWIN of the
-           ``_stage_offers`` plan (same fused-schema cached scan → refine
-           projection → partitionBy(is_valid) parquet write, so both the
-           fat refine codegen unit — the r6 event logs caught a 13 s Janino
-           compile on the first offer round — and the committer classes are
-           hot when real offers arrive; Janino caches by source text, and
-           ``ref_lit`` keeps the round literal out of the source).
-
-        Runs on a daemon thread, once per SparkSession; failures are
-        swallowed (a missed warmup costs latency, never correctness) and no
-        run-dir state is touched (the twin writes under a throwaway tmpdir).
-        """
-        import shutil
-        import tempfile
-
-        sc = self.spark.sparkContext
-        sc.setLocalProperty("spark.job.description", "warmup")
-        try:
-            dp = sc.defaultParallelism
-
-            def _pass(batches):
-                yield from batches
-
-            def _worker_army():
-                # local properties are thread-local — re-tag
-                sc.setLocalProperty("spark.job.description", "warmup")
-                self.spark.range(dp).repartition(dp).mapInPandas(
-                    _pass, "id long"
-                ).count()
-
-            # the two warm targets are independent jobs — overlap them
-            army = ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="warmup-workers"
-            )
-            army_fut = army.submit(_worker_army)
-
-            one = fetch_mod.fused_one_row(self.spark).cache()
-            one.count()
-            parsed = one.filter(
-                (F.col("kind") == "offer")
-                & (F.col("fetch_status") == fetch_mod.FETCH_OK)
-            ).select(
-                "url", "url_canon", "source", "page_idx", "slot", "sub_slot",
-                *parse_mod.RAW_COL_NAMES,
-            )
-            if self.geocode_dim is not None:
-                dim = self.geocode_dim.select(
-                    F.col("city").alias("raw_city"),
-                    F.col("street").alias("raw_street"),
-                    "dim_lat",
-                    "dim_lon",
-                )
-                parsed = parsed.join(
-                    F.broadcast(dim), ["raw_city", "raw_street"], "left"
-                )
-            staged = (
-                refine_mod.refined(parsed)
-                .drop("dim_lat", "dim_lon")
-                .withColumn("round", ref_lit(0, "int"))
-            )
-            tmp = tempfile.mkdtemp(prefix="crawl_warmup_")
-            try:
-                self._coalesced(staged).write.mode("overwrite").partitionBy(
-                    "is_valid"
-                ).parquet(os.path.join(tmp, "staged"))
-            finally:
-                one.unpersist()
-                shutil.rmtree(tmp, ignore_errors=True)
-            army_fut.result()
-            army.shutdown(wait=False)
-        except Exception:
-            pass
-        finally:
-            sc.setLocalProperty("spark.job.description", None)
 
     @contextmanager
     def _phase(self, name: str):
@@ -646,7 +516,6 @@ class CrawlEngine:
                     break
         finally:
             conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        stats["offers_parsed"] += self._drain_staged(block=True)
         with self._phase("run_finalize"):
             # the three finalize jobs touch DISJOINT tables (t_metrics /
             # t_frontier / curated-from-staged) — same overlap rationale as
@@ -897,7 +766,8 @@ class CrawlEngine:
         t_start = time.monotonic()
         self.round_idx += 1
         if self._pending is None or self._eligible_pending_total() == 0:
-            return False, 0, self._finalize_done()
+            self._finalize_done()
+            return False, 0, 0
 
         # Eligibility is a pure filter over the cached working set: ALL known
         # pending listing pages drain together (rounds ≪ O(frontier); order
@@ -918,9 +788,7 @@ class CrawlEngine:
 
         # robots gating runs INSIDE the fetch stage over the once-per-engine
         # broadcast rules (zero extra plan stages; blocked rows surface as
-        # FETCH_ROBOTS and spend no budget). politeness.apply_robots remains
-        # the standalone declarative gate (expression / Arrow UDF by rule
-        # count) for pipelines that want the column.
+        # FETCH_ROBOTS and spend no budget).
         if self.real_sleep and self._wall_t0 is None:
             self._wall_t0 = time.time()
         with self._phase("fetch_plan"):
@@ -943,36 +811,47 @@ class CrawlEngine:
             ).cache()
             pages = fetched.filter(F.col("row_kind") == "page")
 
-        # ---- offers → parse → refine → ONE staged append (raw zone);
-        #      curated tables are views finalized once per run. On a
-        #      single-JVM master this is submitted FIRST — before any action
-        #      has materialized the fetched cache: every consumer below
-        #      (staged / summary / insert / update) races over the same
-        #      cache, and the BlockManager's per-block get-or-compute locks
-        #      make the fused stage compute exactly once while the racers'
-        #      downstream stages overlap. The r6 serialized form paid the
-        #      summary action's full latency BEFORE submitting any output
-        #      job — ~1 s/round of core-invariant wall at depth-bench load.
-        #
-        #      On a MULTI-EXECUTOR master that race is unsound: the
-        #      get-or-compute lock is per-JVM, so racing jobs compute the
-        #      same uncached partition on different executors and the fused
-        #      python parse runs up to min(racers, executors) times
-        #      (measured on local-cluster — see BENCH/BASELINE.md multi-JVM
-        #      section). There the summary scan — one narrow full pass —
-        #      materializes the cache FIRST, then the output jobs fan out
-        #      over warm blocks (remote block fetch, never recompute).
-        #      (Negative result, measured at the 8192-card 4×4-executor
-        #      cell: using the STAGED WRITE as the materializer instead —
-        #      hoping its write would pipeline with the compute — reads
-        #      2,088 vs 2,362 pages/s same-session: the staged job's pre-write exchange
-        #      is a stage barrier, so nothing pipelines and the other three
-        #      consumers just wait behind the write too.)
-        summary = None
-        if not self._single_jvm:
-            with self._phase("fetch_summary"):
-                summary = self._collect_fetch_summary(pages)
-        staged_fut = self._staged_pool.submit(self._stage_offers, pages)
+        # ---- ACTION 1: fetch summary (batch size, lineage counters, status
+        #      mix, per-page yield accounting, politeness high-water marks)
+        #      in one aggregation. It runs BEFORE any output job is
+        #      submitted: its one narrow pass materializes the fused cache,
+        #      so the output jobs below read warm blocks on every master.
+        #      Output jobs racing over an uncached partition are
+        #      compute-once only inside one JVM (the BlockManager's
+        #      get-or-compute lock is executor-local); on a multi-executor
+        #      master they re-ran the fused python parse up to
+        #      min(racers, executors) times (tests/test_cache_race.py).
+        with self._phase("fetch_summary"):
+            summary = self._collect_fetch_summary(pages)
+        batch_n = sum(r["n"] for r in summary)
+        # defensive backstop: an empty batch normally never reaches here
+        # (the round-start eligible-counter check returns first)
+        if batch_n == 0:
+            fetched.unpersist()
+            self._finalize_done()
+            return False, 0, 0
+        # advance the cross-round politeness clock (ST7); rows that spent
+        # no budget (robots/missing) record -1 and are ignored
+        for r in summary:
+            if r["max_at"] is not None and r["max_at"] >= 0:
+                k = r["domain_salt"]
+                if r["max_at"] > self._salt_clock.get(k, -1.0):
+                    self._salt_clock[k] = r["max_at"]
+        self._sources.update(r["source"] for r in summary)
+        self._track_fetched(summary)
+        # listing pages whose fetch RESOLVED this round (not re-enqueued) —
+        # the per-source page count feeding A5
+        listing_pages_fetched: dict[str, set[int]] = defaultdict(set)
+        for r in summary:
+            if (
+                r["kind"] == "listing"
+                and not self._is_requeue(r)
+                # MISSING = beyond-end-of-pagination (404 past the last
+                # page): no content was observed, so it neither feeds the
+                # A5 no-new streak nor counts as content
+                and r["fetch_status"] != fetch_mod.FETCH_MISSING
+            ):
+                listing_pages_fetched[r["source"]].add(r["page_key"])
 
         # ---- link rows (already extracted inside the fused stage) → new
         #      frontier candidates; url/slot/kind on a link row are the
@@ -1072,35 +951,18 @@ class CrawlEngine:
             with self._phase("insert_deltas"):
                 return _collect_insert_deltas(new_df)
 
-        # ---- the round-output jobs overlap: insert ∥ update first, then
-        # (seen table ∥ prefilter deltas + driver counters) over the
-        # insert delta while the update may still be writing. ~3-5 s/round
+        # ---- the round-output jobs overlap: staged ∥ insert ∥ update first,
+        # then (seen table ∥ prefilter deltas + driver counters) over the
+        # insert delta while the others may still be writing. ~3-5 s/round
         # of serialized small-job latency at depth-bench load becomes the
-        # max() of the chains.
+        # max() of the chains. Every job is joined before the checkpoint,
+        # so a checkpointed round's offers are already durable.
         new_n = 0
         new_offer_counts: dict[str, int] = defaultdict(int)
         with ThreadPoolExecutor(max_workers=5) as pool:
+            staged_fut = pool.submit(self._stage_offers, pages)
             ins_fut = pool.submit(_ins)
             upd_fut = pool.submit(_upd)
-
-            # ---- ACTION: fetch summary (batch size, lineage counters,
-            #      status mix, per-page yield accounting, politeness
-            #      high-water marks) in one aggregation — on a single-JVM
-            #      master submitted to the POOL so the main thread is free
-            #      to dispatch the post-insert consumers the moment the
-            #      insert delta lands (collecting it inline here serialized
-            #      the seen/deltas submissions behind the summary's full
-            #      cache-materialization wait); on a multi-executor master
-            #      it already ran above as the cache materializer.
-            sum_fut = (
-                pool.submit(
-                    self._tagged, "fetch_summary",
-                    self._collect_fetch_summary, pages,
-                )
-                if summary is None
-                else None
-            )
-
             ins_n, ins_path = ins_fut.result()
             # explicit schema: the snapshot was written from FRONTIER_COLS
             # this round — inferring it back would re-read footers per round
@@ -1109,38 +971,9 @@ class CrawlEngine:
                 if ins_n
                 else None
             )
-            seen_fut = deltas_fut = None
             if new_df is not None:
                 seen_fut = pool.submit(_seen)
                 deltas_fut = pool.submit(_deltas)
-
-            if sum_fut is not None:
-                summary = sum_fut.result()
-            batch_n = sum(r["n"] for r in summary)
-            # advance the cross-round politeness clock (ST7); rows that
-            # spent no budget (robots/missing) record -1 and are ignored
-            for r in summary:
-                if r["max_at"] is not None and r["max_at"] >= 0:
-                    k = r["domain_salt"]
-                    if r["max_at"] > self._salt_clock.get(k, -1.0):
-                        self._salt_clock[k] = r["max_at"]
-            self._sources.update(r["source"] for r in summary)
-            self._track_fetched(summary)
-            # listing pages whose fetch RESOLVED this round (not
-            # re-enqueued) — the per-source page count feeding A5
-            listing_pages_fetched: dict[str, set[int]] = defaultdict(set)
-            for r in summary:
-                if (
-                    r["kind"] == "listing"
-                    and not self._is_requeue(r)
-                    # MISSING = beyond-end-of-pagination (404 past the
-                    # last page): no content was observed, so it neither
-                    # feeds the A5 no-new streak nor counts as content
-                    and r["fetch_status"] != fetch_mod.FETCH_MISSING
-                ):
-                    listing_pages_fetched[r["source"]].add(r["page_key"])
-
-            if new_df is not None:
                 seen_fut.result()
                 delta, agg = deltas_fut.result()
                 for shard_key, arr in delta.items():
@@ -1151,35 +984,9 @@ class CrawlEngine:
                     if r["kind"] != "listing":  # offers + investments
                         new_offer_counts[r["source"]] += r["n"]
             upd_n, upd_path = upd_fut.result()
-
-        # ---- join the overlapped staging job (see submit above). With an
-        # offer limit the count gates the next round, so join NOW; without
-        # one the join is DEFERRED: the staged write's tail then overlaps
-        # the next round's fetch/plan driver latency instead of serializing
-        # at the end of this round (~0.3-1.2 s/run at bench load), and the
-        # single staging worker keeps appends ordered regardless.
-        if self.offer_limit is None:
-            # the fetched cache rides along: the deferred staged job may
-            # still be scanning it, so its unpersist waits for the join
-            # (an early unpersist would silently recompute the fused
-            # python stage for evicted partitions)
-            self._staged_pending.append(
-                (self.round_idx, batch_n, staged_fut, fetched)
-            )
-            offers_n = self._drain_staged(block=False)
-        else:
             with self._phase("staged_join"):
                 offers_n = staged_fut.result()
-            self._offers_total += offers_n
-
-        # defensive backstop: an empty batch normally never reaches here
-        # (the round-start eligible-counter check returns first), but if it
-        # does, every output job above was a joined no-op (0-row appends)
-        if batch_n == 0:
-            if self.offer_limit is not None:
-                # deferred-join rounds unpersist at drain time instead
-                fetched.unpersist()
-            return False, 0, offers_n + self._finalize_done()
+        self._offers_total += offers_n
 
         # ---- next working set: O(batch) unions whose roots are all ON DISK
         # (previous checkpoint + this round's delta parquet), so the lazy
@@ -1242,29 +1049,20 @@ class CrawlEngine:
             ]
             + [
                 (self.round_idx, "discover", -1, None, batch_n, new_n, 0, wall_ms),
+                (self.round_idx, "offers", -1, None, batch_n, offers_n, 0, wall_ms),
             ]
-            + (
-                # deferred-join rounds emit their offers row at drain time
-                []
-                if self.offer_limit is None
-                else [
-                    (self.round_idx, "offers", -1, None, batch_n, offers_n, 0, wall_ms)
-                ]
-            )
         )
 
         # checkpoint from driver-tracked progress — no read-back aggregation
         self._write_checkpoint()
-        if self.offer_limit is not None:
-            # deferred-join rounds unpersist at drain time instead
-            fetched.unpersist()
+        fetched.unpersist()
         return True, batch_n, offers_n
 
     def _stage_offers(self, pages: DataFrame) -> int:
         """Parsed offer rows (raw fields came out of the fused fetch+parse
         stage) → refine → one staged append; returns the round's
-        valid-offer count (parquet footers, no extra job). Runs on the
-        staging thread — touches only t_staged and the fetched cache."""
+        valid-offer count (parquet footers, no extra job). Runs on a round
+        pool thread — touches only t_staged and the fetched cache."""
         with self._phase("staged_plan"):
             parsed = pages.filter(
                 (F.col("kind") == "offer")
@@ -1427,43 +1225,14 @@ class CrawlEngine:
             .collect()
         )
 
-    def _drain_staged(self, block: bool) -> int:
-        """Join deferred staged-append futures (completed ones, or ALL when
-        ``block``): fold their valid-offer counts into the run totals and
-        emit the per-round offers metric rows the inline path would have
-        written (wall_ms 0.0 — the owning round's wall closed before the
-        deferred join resolved). Returns the newly-resolved offer count."""
-        resolved = 0
-        still_pending = []
-        for rnd, bn, fut, cached in self._staged_pending:
-            if block or fut.done():
-                with self._phase("staged_join"):
-                    n = fut.result()
-                if cached is not None:
-                    try:
-                        cached.unpersist()
-                    except Exception:
-                        pass
-                self._offers_total += n
-                self._metrics_buf.append(
-                    (rnd, "offers", -1, None, bn, n, 0, 0.0)
-                )
-                resolved += n
-            else:
-                still_pending.append((rnd, bn, fut, cached))
-        self._staged_pending = still_pending
-        return resolved
-
     # ------------------------------------------------------------ teardown
-    def _finalize_done(self) -> int:
-        drained = self._drain_staged(block=True)
+    def _finalize_done(self) -> None:
         for src in sorted(self._sources):
             if self._had_fetch_fail.get(src):
                 continue  # retryable — stays not-done with fetch_fail (ST5)
             self._stopped.setdefault(src, "no_links")
         self._write_checkpoint()
         self._flush_metrics()
-        return drained
 
     def _track_new_agg(self, agg_rows) -> None:
         for r in agg_rows:
@@ -1761,7 +1530,7 @@ class CrawlEngine:
         raw staged zone — one write each per run (the reference's batched
         flush, O4, at run granularity). The three tables are independent
         views over the same staged scan, so the writes run as concurrent
-        jobs (same overlap rationale as the in-round staging thread)."""
+        jobs (same overlap rationale as the in-round output jobs)."""
         jobs = [
             (table, df)
             for table, df in (

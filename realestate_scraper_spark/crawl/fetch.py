@@ -36,13 +36,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-FETCH_RESULT_FIELDS = (
-    "url string, url_canon string, url_hash64 long, source string, "
-    "domain string, domain_salt string, kind string, page_idx int, slot int, "
-    "sub_slot int, attempts int, html string, fetch_status string, "
-    "fetched_at_ms double"
-)
-
 # O9 alternate listing-URL spelling (morizon.py:631-635): the portal's
 # primary template `morizon.pl/{category}/…` sometimes serves an empty shell;
 # the reference then retries `morizon.pl/nieruchomosci/{category}/…`
@@ -103,11 +96,10 @@ def _make_fetch_core(
     start_offsets: dict[str, float] | None = None,
     t0_wall: float | None = None,
 ):
-    """The per-row fetch closure (politeness token buckets, robots gating,
-    synthetic failure modes, O9 alternate-spelling fallback) shared by the
-    html-emitting stage and the fused fetch+parse stage. Returns
-    ``fetch_row(url_canon, domain, salt, kind, attempts, allowed) →
-    (html | None, fetch_status, fetched_at_ms)``."""
+    """The per-row fetch closure of the fused fetch+parse stage
+    (politeness token buckets, robots gating, synthetic failure modes, O9
+    alternate-spelling fallback). Returns ``fetch_row(url_canon, domain,
+    salt, kind, attempts) → (html | None, fetch_status, fetched_at_ms)``."""
     from realestate_scraper_spark.functions.urlnorm import canonicalize_url_py
 
     # The broadcast HANDLES are captured; ``.value`` is dereferenced lazily
@@ -161,7 +153,7 @@ def _make_fetch_core(
         next_free[key] = at + eff_delay
         return at
 
-    def fetch_row(url_canon, domain, salt, kind, attempts, allowed_by_rules):
+    def fetch_row(url_canon, domain, salt, kind, attempts):
         if not _state:
             _state["store"] = page_store_bc.value
             _state["rules"] = (
@@ -169,13 +161,10 @@ def _make_fetch_core(
             )
         store = _state["store"]
         rules = _state["rules"]
-        if not allowed_by_rules:
-            return None, FETCH_ROBOTS, -1.0
         if rules is not None:
             r = rules.get(domain)
             # canonicalize_url rstrips "/", so a root URL has no path
-            # separator after the scheme — treat it as "/" (same
-            # convention as politeness.apply_robots)
+            # separator after the scheme — treat it as "/"
             sep = url_canon.find("/", 8)
             if r is not None and not r.allows(
                 url_canon[sep:] if sep != -1 else "/"
@@ -221,81 +210,6 @@ def _make_fetch_core(
     return fetch_row
 
 
-def make_fetch_stage(
-    page_store_bc,
-    n_salts: int,
-    default_delay_ms: int = 100,
-    real_sleep: bool = False,
-    robots_rules_bc=None,
-    start_offsets: dict[str, float] | None = None,
-    t0_wall: float | None = None,
-):
-    """Returns the mapInPandas function closed over the broadcast store.
-
-    ``robots_rules_bc`` (optional): broadcast {domain → RobotsRules}; the
-    robots decision then runs INSIDE this stage (same Python pass as the
-    fetch, zero extra plan stages) — blocked rows surface as FETCH_ROBOTS
-    and spend no politeness budget. This is the S4-style pre-request gate
-    colocated with the request, exactly where the reference checks before
-    GET (core/http.py:92-103).
-
-    ``start_offsets`` (ST7 cross-round continuity): {domain_salt → last
-    consumed virtual ms from PREVIOUS rounds}. A bucket's first grant this
-    round starts at last + eff_delay, so the per-domain rate holds across
-    the WHOLE RUN — the reference's limiter lives for the whole process
-    (core/http.py:13-21), not per batch. Without it the clock re-zeroed
-    every round and short rounds could exceed the configured RPS.
-    ``t0_wall`` anchors virtual ms 0 to the run's wall start (epoch secs)
-    so real_sleep targets are run-global, not round-local."""
-
-    fetch_row = _make_fetch_core(
-        page_store_bc, n_salts, real_sleep=real_sleep,
-        robots_rules_bc=robots_rules_bc, start_offsets=start_offsets,
-        t0_wall=t0_wall,
-    )
-
-    def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_html, out_status, out_at = [], [], []
-            # optional robots pre-gate column (politeness.apply_robots):
-            # blocked rows spend no budget and never touch the store
-            gate = (
-                pdf["robots_allowed"]
-                if "robots_allowed" in pdf.columns
-                else [True] * len(pdf)
-            )
-            for url_canon, domain, salt, kind, attempts, allowed_by_rules in zip(
-                pdf["url_canon"], pdf["domain"], pdf["domain_salt"],
-                pdf["kind"], pdf["attempts"], gate
-            ):
-                html, status, at = fetch_row(
-                    url_canon, domain, salt, kind, attempts, allowed_by_rules
-                )
-                out_html.append(html)
-                out_status.append(status)
-                out_at.append(at)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "url_canon": pdf["url_canon"],
-                    "url_hash64": pdf["url_hash64"],
-                    "source": pdf["source"],
-                    "domain": pdf["domain"],
-                    "domain_salt": pdf["domain_salt"],
-                    "kind": pdf["kind"],
-                    "page_idx": pdf["page_idx"],
-                    "slot": pdf["slot"],
-                    "sub_slot": pdf["sub_slot"],
-                    "attempts": pdf["attempts"],
-                    "html": out_html,
-                    "fetch_status": out_status,
-                    "fetched_at_ms": out_at,
-                }
-            )
-
-    return fetch_batches
-
-
 # Fused fetch+parse output: one schema for BOTH row shapes —
 #   row_kind='page': one row per fetched URL (fetch bookkeeping + the offer
 #     parse cascade's raw fields when the page was an OK offer)
@@ -328,35 +242,6 @@ _META_COLS = (
 )
 
 
-def fused_one_row(spark):
-    """A 1-row DataFrame with the exact FUSED_FIELDS schema — the engine's
-    warmup twin input. unionByName with the empty typed frame pins column
-    order AND types (a bare selectExpr would drift on int widths), and one
-    real row keeps AQE's empty-relation propagation from pruning the plan
-    the warmup exists to compile."""
-    empty = spark.createDataFrame([], FUSED_FIELDS)
-    one = spark.range(1).selectExpr(
-        "'page' as row_kind", "'u' as url", "'u' as url_canon",
-        "cast(1 as long) as url_hash64", "'otodom' as source",
-        "'d' as domain", "'d#0' as domain_salt", "'offer' as kind",
-        "1 as page_idx", "0 as slot", "0 as sub_slot", "0 as attempts",
-        f"'{FETCH_OK}' as fetch_status",
-        "cast(0.0 as double) as fetched_at_ms", "0 as dom_idx",
-        "'h' as href", "true as parse_ok",
-        "cast(1.0 as double) as raw_price", "'PLN' as raw_currency",
-        "cast(1.0 as double) as raw_ppm2", "cast(1.0 as double) as raw_area",
-        "1 as raw_rooms", "'c' as raw_city",
-        "cast(1.0 as double) as raw_lat", "cast(1.0 as double) as raw_lon",
-        "array(named_struct('url', 'p', 'w', 1)) as photo_urls",
-        "'t' as raw_title", "'d' as raw_district", "'s' as raw_street",
-        "1 as raw_floor", "1 as raw_floors", "'primary' as raw_market",
-        "'flat' as raw_ptype", "'2024-01-01' as raw_posted",
-        "'2024-01-01' as raw_updated", "2000 as raw_year",
-        "array('a') as raw_features",
-    )
-    return empty.unionByName(one)
-
-
 def make_fetch_parse_stage(
     page_store_bc,
     n_salts: int,
@@ -370,7 +255,19 @@ def make_fetch_parse_stage(
     parse cascade in ONE python pass per partition (crawl/parse.py holds
     the per-page parse cores). Exists because materializing the fetched html
     between stages costs a cache round-trip of the whole page corpus every
-    round — the measured in-loop scale limiter."""
+    round — the measured in-loop scale limiter.
+
+    ``robots_rules_bc`` (optional): broadcast {domain → RobotsRules}; the
+    robots decision runs in the same pass, before the request, as the
+    reference checks before GET (core/http.py:92-103) — blocked rows
+    surface as FETCH_ROBOTS and spend no politeness budget.
+
+    ``start_offsets`` (ST7 cross-round continuity): {domain_salt → last
+    consumed virtual ms from PREVIOUS rounds}. A bucket's first grant this
+    round starts at last + eff_delay, so the per-domain rate holds across
+    the whole run, like the reference's process-lifetime limiter
+    (core/http.py:13-21). ``t0_wall`` anchors virtual ms 0 to the run's
+    wall start (epoch secs) so real_sleep targets are run-global."""
     from realestate_scraper_spark.crawl import parse as parse_mod
 
     fetch_row = _make_fetch_core(
@@ -382,16 +279,11 @@ def make_fetch_parse_stage(
     def fused_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one tick per PARTITION COMPUTE: a partition served from cache never
         # re-enters this generator, so the accumulator reads n_partitions iff
-        # the round's racing consumers shared one compute (the multi-executor
-        # duplicate-compute probe — see engine.is_single_jvm_master)
+        # the round's consumers shared one compute (the multi-executor
+        # duplicate-compute probe — see tests/test_cache_race.py)
         if computes_acc is not None:
             computes_acc.add(1)
         for pdf in batches:
-            gate = (
-                pdf["robots_allowed"]
-                if "robots_allowed" in pdf.columns
-                else [True] * len(pdf)
-            )
             # Page rows and link rows buffer SEPARATELY: a link row only
             # needs the seven fields the frontier path reads (parent url /
             # source / kind / page_idx / slot + dom_idx + href) — the other
@@ -407,10 +299,10 @@ def make_fetch_parse_stage(
             l_page, l_slot, l_dom, l_href = [], [], [], []
 
             rows = pdf.to_dict("records")
-            for row, allowed in zip(rows, gate):
+            for row in rows:
                 html, status, at = fetch_row(
                     row["url_canon"], row["domain"], row["domain_salt"],
-                    row["kind"], row["attempts"], allowed,
+                    row["kind"], row["attempts"],
                 )
                 # the page row (always)
                 for c in _META_COLS:
@@ -497,12 +389,15 @@ def fetch_parse(
     t0_wall: float | None = None,
     computes_acc=None,
 ) -> DataFrame:
-    """Repartition by domain_salt and run the FUSED fetch+parse stage (see
-    make_fetch_parse_stage); the same pinned-count exchange rationale as
-    :func:`fetch`."""
-    cols = list(_META_COLS)
-    if "robots_allowed" in frontier_batch.columns:
-        cols.append("robots_allowed")
+    """Repartition by domain_salt (the one shuffle of the fetch path) and
+    run the FUSED fetch+parse stage (see make_fetch_parse_stage).
+
+    The partition COUNT is pinned: the rows entering this exchange are tiny
+    frontier keys, so AQE's coalescePartitions would happily squash a bare
+    ``repartition(col)`` to one partition and serialize the whole
+    fetch+parse on a single core. A pinned count keeps the politeness
+    property (each salt hashes to exactly one partition) AND the
+    parallelism."""
     stage = make_fetch_parse_stage(
         page_store_bc, n_salts, real_sleep=real_sleep,
         robots_rules_bc=robots_rules_bc,
@@ -513,46 +408,7 @@ def fetch_parse(
         frontier_batch.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     return (
-        frontier_batch.select(*cols)
+        frontier_batch.select(*_META_COLS)
         .repartition(n_part, F.col("domain_salt"))
         .mapInPandas(stage, schema=FUSED_FIELDS)
-    )
-
-
-def fetch(
-    frontier_batch: DataFrame,
-    page_store_bc,
-    n_salts: int,
-    real_sleep: bool = False,
-    robots_rules_bc=None,
-    start_offsets: dict[str, float] | None = None,
-    t0_wall: float | None = None,
-) -> DataFrame:
-    """Repartition by domain_salt (the one shuffle of the fetch path) and run
-    the politeness-governed batch fetch."""
-    cols = [
-        "url", "url_canon", "url_hash64", "source", "domain", "domain_salt",
-        "kind", "page_idx", "slot", "sub_slot", "attempts",
-    ]
-    if "robots_allowed" in frontier_batch.columns:
-        cols.append("robots_allowed")
-    stage = make_fetch_stage(
-        page_store_bc, n_salts, real_sleep=real_sleep,
-        robots_rules_bc=robots_rules_bc,
-        start_offsets=start_offsets, t0_wall=t0_wall,
-    )
-    # Pin the partition COUNT: the rows entering this exchange are tiny
-    # (frontier keys — the heavy html appears on the OUTPUT of the stage),
-    # so AQE's coalescePartitions would happily squash a bare
-    # repartition(col) to one partition and serialize the whole fetch+parse
-    # pipeline on a single core. A pinned count keeps the politeness
-    # property (each salt hashes to exactly one partition) AND the
-    # parallelism.
-    n_part = int(
-        frontier_batch.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    return (
-        frontier_batch.select(*cols)
-        .repartition(n_part, F.col("domain_salt"))
-        .mapInPandas(stage, schema=FETCH_RESULT_FIELDS)
     )

@@ -30,11 +30,14 @@ REPO = Path(__file__).resolve().parents[1]
 WORKER = REPO / "scripts" / "depth_worker.py"
 MARKER = "## Round-loop amortization at depth"
 
-def replace_own_section(text: str, lines: list[str]) -> str:
-    """Replace ONLY this script's report section in ``text``: the MARKER
-    heading line → the next ``## `` heading (or EOF when it is last);
-    append when absent. MARKER counts only as a whole heading line, so a
-    prose mention of it elsewhere never starts the section.
+def replace_own_section(
+    text: str, lines: list[str], marker: str = MARKER
+) -> str:
+    """Replace ONLY one report section in ``text``: the ``marker`` heading
+    line → the next ``## `` heading (or EOF when it is last); append when
+    absent. ``marker`` counts only as a whole heading line, so a prose
+    mention of it elsewhere never starts the section. Every bench script
+    that owns a BENCH/BASELINE.md section writes it through here.
 
     The r6 version truncated the whole file at the marker and appended,
     silently DELETING every unrelated section after it (the r6 depth
@@ -42,7 +45,7 @@ def replace_own_section(text: str, lines: list[str]) -> str:
     r6 verdict's one regression). Pinned by
     tests/test_report_sections.py."""
     block = "\n".join(lines).rstrip() + "\n"
-    m = re.search(rf"^{re.escape(MARKER)}[ \t]*$", text, re.M)
+    m = re.search(rf"^{re.escape(marker)}[ \t]*$", text, re.M)
     if m is None:
         return text.rstrip() + "\n\n" + block
     start = m.start()

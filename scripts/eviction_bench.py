@@ -36,6 +36,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
+from depth_bench import replace_own_section  # noqa: E402
+
 MARKER = "## Eviction at volume"
 N_ROWS = 1_000_000
 N_SALTS = 16
@@ -232,23 +234,7 @@ def main() -> None:
         "",
     ]
     md_path = REPO / "BENCH" / "BASELINE.md"
-    text = md_path.read_text()
-    section = "\n".join(lines).rstrip() + "\n"
-    depth_marker = "## Round-loop amortization at depth"
-    if MARKER in text:
-        # replace in place (section ends at the next ## heading or EOF)
-        start = text.index(MARKER)
-        nxt = text.find("\n## ", start + len(MARKER))
-        tail = text[nxt + 1 :] if nxt != -1 else ""
-        text = text[:start].rstrip() + "\n\n" + section + "\n" + tail
-    elif depth_marker in text:
-        # insert ABOVE the depth section — scripts/depth_bench.py truncates
-        # everything below its own marker when it re-runs
-        i = text.index(depth_marker)
-        text = text[:i].rstrip() + "\n\n" + section + "\n" + text[i:]
-    else:
-        text = text.rstrip() + "\n\n" + section
-    md_path.write_text(text)
+    md_path.write_text(replace_own_section(md_path.read_text(), lines, MARKER))
     print("written to", md_path)
     spark.stop()
 

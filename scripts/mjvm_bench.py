@@ -21,10 +21,12 @@ import subprocess
 import sys
 from pathlib import Path
 
+from depth_bench import replace_own_section
+
 REPO = Path(__file__).resolve().parents[1]
 WORKER = REPO / "scripts" / "depth_worker.py"
 PLANE_WORKER = REPO / "scripts" / "scaling_worker.py"
-MARKER = "## Multi-JVM evidence"
+MARKER = "## Multi-JVM evidence: separate executor processes"
 
 CORES_PER_EXECUTOR = 4
 LEVELS = (1, 4)  # executor counts
@@ -98,7 +100,7 @@ def main() -> None:
     im_hi = max(t["images_per_sec"] for t in plane_hi)
 
     lines = [
-        MARKER + ": separate executor processes",
+        MARKER,
         "",
         "Every thread-mode number above runs local[N] — N task threads in ONE JVM,",
         "which a skeptic can discount (shared heap, no process boundary on shuffle",
@@ -143,8 +145,8 @@ def main() -> None:
         "measured 22 computes for 16 partitions at just 2 executors (37 %",
         "duplicated python parse; it grows with executor count and partition",
         "weight). The engine now materializes the cache with the summary scan",
-        "FIRST on non-`local[N]` masters, then fans the output jobs over warm",
-        "blocks (`engine.is_single_jvm_master`; compute-once on a real",
+        "FIRST, then fans the output jobs over warm blocks (the round",
+        "schedule is the same on every master; compute-once on a real",
         "local-cluster is pinned by `tests/test_cache_race.py`). That trades the",
         "thread-mode parse/downstream overlap — bounded, ~downstream/parse — for",
         "the unbounded duplicate-compute loss; at the fat cell the fix alone",
@@ -189,19 +191,9 @@ def main() -> None:
                                    "images_per_sec")}
             ))
     lines += ["```", ""]
-    section = "\n".join(lines)
 
     path = REPO / "BENCH" / "BASELINE.md"
-    text = path.read_text()
-    if MARKER in text:
-        head, _, rest = text.partition(MARKER)
-        # the old section runs to the next "## " heading or EOF
-        nxt = rest.find("\n## ")
-        tail = rest[nxt + 1:] if nxt != -1 else ""
-        text = head + section + tail
-    else:
-        text = text.rstrip() + "\n\n" + section
-    path.write_text(text)
+    path.write_text(replace_own_section(path.read_text(), lines, MARKER))
 
 
 if __name__ == "__main__":

@@ -22,7 +22,9 @@ from __future__ import annotations
 
 import argparse
 import json
+import re
 import sys
+import time
 from pathlib import Path
 
 # When shipped via --py-files the package is on the PYTHONPATH already; when
@@ -48,10 +50,7 @@ def main() -> None:
                     help="enforce politeness in wall-clock (live crawls)")
     args = ap.parse_args()
 
-    from realestate_scraper_spark.crawl.engine import (
-        CrawlEngine,
-        is_single_jvm_master,
-    )
+    from realestate_scraper_spark.crawl.engine import CrawlEngine
     from realestate_scraper_spark.crawl.politeness import parse_robots_txt
     from realestate_scraper_spark.session import get_spark
     from realestate_scraper_spark.sources.synth import (
@@ -63,26 +62,21 @@ def main() -> None:
 
     spark = get_spark(app_name="crawl")
     sc = spark.sparkContext
-    if not is_single_jvm_master(sc.master):
-        # Multi-executor master: wait for executor registration before the
-        # engine ctor sizes its exchanges off defaultParallelism. For
-        # local-cluster[n,c,mem] the target core count is knowable exactly;
-        # on dynamic masters (YARN/k8s) the first job blocks on executors
-        # anyway, so no wait is needed.
-        import re
-        import time
-
-        m = re.match(r"local-cluster\[(\d+),(\d+),\d+\]", sc.master)
-        if m:
-            want = int(m.group(1)) * int(m.group(2))
-            deadline = time.monotonic() + 120
-            while sc.defaultParallelism < want and time.monotonic() < deadline:
-                time.sleep(0.5)
-            if sc.defaultParallelism < want:
-                raise RuntimeError(
-                    f"executors never registered: {sc.defaultParallelism}"
-                    f"/{want} cores after 120 s"
-                )
+    # local-cluster[n,c,mem]: wait for executor registration before the
+    # engine ctor sizes its exchanges off defaultParallelism (the target
+    # core count is knowable exactly). On dynamic masters (YARN/k8s) the
+    # first job blocks on executors anyway, so no wait is needed.
+    m = re.match(r"local-cluster\[(\d+),(\d+),\d+\]", sc.master)
+    if m:
+        want = int(m.group(1)) * int(m.group(2))
+        deadline = time.monotonic() + 120
+        while sc.defaultParallelism < want and time.monotonic() < deadline:
+            time.sleep(0.5)
+        if sc.defaultParallelism < want:
+            raise RuntimeError(
+                f"executors never registered: {sc.defaultParallelism}"
+                f"/{want} cores after 120 s"
+            )
     offers = make_offers(seed=42, n_pages=args.pages, cards_per_page=args.cards)
     graph = make_site_graph(offers, n_pages=args.pages)
     rules = {

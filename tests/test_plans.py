@@ -138,49 +138,3 @@ def test_ref_lit_codegen_source_is_value_invariant(spark):
     # the wrapper must not force an interpreted fallback: the projection
     # stays inside a WholeStageCodegen span ('*(n)' prefix)
     assert "*(" in da._jdf.queryExecution().executedPlan().toString()
-
-
-def test_warmup_twin_matches_fused_schema_and_leaves_no_state(spark, tmp_path):
-    """The ctor warmup (engine._warmup) compiles the staged write path on a
-    1-row TWIN of the fused fetch+parse output. The twin must carry the
-    EXACT FUSED schema (or the compiled codegen would not be the one the
-    real rounds hit) and the warmup must leave no run-dir state behind."""
-    import os
-
-    from realestate_scraper_spark.crawl import engine as eng_mod
-    from realestate_scraper_spark.crawl import fetch as fetch_mod
-
-    one = fetch_mod.fused_one_row(spark)
-    empty = spark.createDataFrame([], fetch_mod.FUSED_FIELDS)
-    assert one.schema == empty.schema
-    assert one.count() == 1  # AQE must not be able to prune the twin
-
-    # warmup is synchronous here (call the body directly) and idempotent
-    from realestate_scraper_spark.sources.synth import (
-        make_offers,
-        make_site_graph,
-    )
-
-    offers = make_offers(seed=7, n_pages=1, cards_per_page=2)
-    graph = make_site_graph(offers, n_pages=1)
-    run_dir = str(tmp_path / "wrun")
-    eng = eng_mod.CrawlEngine(
-        spark, run_dir, graph, n_salts=2, seen_buckets=2,
-        append_coalesce=2, warmup=False,
-    )
-    before = set(os.listdir(run_dir))
-    eng._warmup()
-    assert set(os.listdir(run_dir)) == before
-    # once-per-session guard: a second engine on the same session skips
-    eng_mod._WARMED_SESSIONS.discard(spark.sparkContext.applicationId)
-    e2 = eng_mod.CrawlEngine(
-        spark, str(tmp_path / "wrun2"), graph, n_salts=2, seen_buckets=2,
-        append_coalesce=2,
-    )
-    assert e2._warmup_thread is not None
-    e3 = eng_mod.CrawlEngine(
-        spark, str(tmp_path / "wrun3"), graph, n_salts=2, seen_buckets=2,
-        append_coalesce=2,
-    )
-    assert e3._warmup_thread is None
-    e2._warmup_thread.join(timeout=120)

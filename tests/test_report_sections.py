@@ -61,6 +61,22 @@ def test_replace_ignores_prose_mention_of_marker():
     assert out.index("keep me") < out.index("NEW") < out.index("## After")
 
 
+def test_replace_with_non_default_marker():
+    """Other bench scripts pass their own heading: only that heading line
+    starts the section, and the default-marker section is left alone."""
+    own = "## Multi-JVM evidence: separate executor processes"
+    text = (
+        "# T\n\n## Notes\n\nsee `## Multi-JVM evidence` below\n\n"
+        f"{MARKER}\n\ndepth body\n\n{own}\n\nOLD\n\n## After\n\ntail\n"
+    )
+    out = replace_own_section(text, [own, "", "NEW"], own)
+    assert "OLD" not in out and "NEW" in out
+    assert "see `## Multi-JVM evidence` below" in out
+    assert "depth body" in out and "## After" in out and "tail" in out
+    assert out.count(own) == 1
+    assert out.index("depth body") < out.index("NEW") < out.index("## After")
+
+
 def test_replace_appends_when_absent():
     text = "# T\n\n## Keep\n\nx\n"
     out = replace_own_section(text, [MARKER, "", "NEW"])

@@ -53,16 +53,9 @@ def crawl(spark, tmp_path_factory):
 def test_run_plans_keep_python_to_fused_fetch_parse(crawl):
     _, stats, during = crawl
     assert stats["rounds"] > 1
-    # the once-per-session warmup thread (pre-forks the Python workers) may
-    # overlap the first round; it is not part of the round loop
-    plans = {
-        eid: (desc, plan)
-        for eid, (desc, plan) in during.items()
-        if desc != "warmup"
-    }
-    assert any(desc == "insert_deltas" for desc, _ in plans.values())
+    assert any(desc == "insert_deltas" for desc, _ in during.values())
     fused = 0
-    for eid, (desc, plan) in sorted(plans.items()):
+    for eid, (desc, plan) in sorted(during.items()):
         for op in ("ArrowEvalPython", "FlatMapGroupsInPandas"):
             assert op not in plan, f"execution {eid} ({desc}) runs {op}"
         fns = _MAP_IN_PANDAS_FN.findall(plan)
