@@ -11,17 +11,19 @@ URLs"):
   domain-salt keys each shard is ~12 MB, and a fetch partition only ever
   consults its *own* shard (frontier is hash-partitioned by the same key), so
   the executor-resident working set stays tiny.
-- wholesale builds (``build``: resume without a snapshot, eviction rebuilds)
-  run distributed (``groupBy(shard).applyInPandas`` — each group builds its
-  bitmap JVM→Arrow→numpy); the crawl round loop grows the driver filter
-  in place with ``add_local`` from the round's collected new-key hashes.
+- ``build`` is the one way a filter comes to exist, and it runs
+  distributed (``groupBy(shard).applyInPandas`` — each group builds its
+  bitmap JVM→Arrow→numpy). The engine builds its filter from the seen
+  store on first use and drops it whenever the store grows; eviction
+  rebuilds only the shards that lost keys.
 - **false positives never drop URLs**: ``filter_maybe_seen`` only ever
   admits "definitely-new" rows without the exact check; "maybe-seen" rows
   go through the exact anti-join (crawl/frontier.py). The crawl round loop
-  sends every candidate through the exact check, so there the filter is
-  state for ``resume`` and ``evict_seen``, not a per-round gate.
-- snapshots serialize to ``.npz`` per checkpoint round (north_rule:
-  "resumable from checkpoint with … Bloom snapshots").
+  sends every candidate through the exact check, so it never reads the
+  filter.
+- nothing is snapshotted: the durable seen store is the checkpointed state
+  (north_rule: "resumable from checkpoint"), and the filter is rebuilt from
+  it on demand after a resume.
 
 A cuckoo-filter variant (deletable entries, for frontier eviction) is in
 crawl/cuckoo.py with the same interface.
@@ -32,10 +34,7 @@ xxhash64(url_canon) — the standard Kirsch–Mitzenmacher construction.
 
 from __future__ import annotations
 
-import io
 import math
-import os
-from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -83,13 +82,9 @@ class BloomShard:
         bit = (word >> (pos & 63).astype(np.uint64)) & np.uint64(1)
         return bit.all(axis=1).astype(bool)
 
-    def merge(self, other: "BloomShard") -> None:
-        assert (self.m, self.k) == (other.m, other.k)
-        self.bits |= other.bits
-
 
 class ShardedBloom:
-    """dict[domain_salt → BloomShard] with build / test / snapshot."""
+    """dict[domain_salt → BloomShard] with build / test."""
 
     def __init__(self, shards: dict[str, BloomShard] | None = None,
                  expected_per_shard: int = 1 << 16, fpp: float = 0.01):
@@ -133,25 +128,6 @@ class ShardedBloom:
         }
         return cls(shards, expected_per_shard, fpp)
 
-    def merge(self, other: "ShardedBloom") -> None:
-        for key, shard in other.shards.items():
-            if key in self.shards:
-                self.shards[key].merge(shard)
-            else:
-                # copy — adopting a live reference would alias later in-place
-                # add_local mutations back into the source filter (the same
-                # hazard ADVICE r5 flagged on the cuckoo twin)
-                self.shards[key] = BloomShard(shard.m, shard.k, shard.bits.copy())
-
-    def add_local(self, shard_key: str, hashes: Iterable[int]) -> None:
-        m, k = _params(self.expected_per_shard, self.fpp)
-        arr = (
-            hashes
-            if isinstance(hashes, np.ndarray)
-            else np.fromiter(hashes, dtype=np.int64)
-        )
-        self.shards.setdefault(shard_key, BloomShard(m, k)).add_hashes(arr)
-
     # ----------------------------------------------------------------- test
     def filter_maybe_seen(
         self,
@@ -187,33 +163,3 @@ class ShardedBloom:
             return pd.Series(out)
 
         return df.withColumn(out_col, _maybe(F.col(key_col), F.col(shard_col)))
-
-    # ------------------------------------------------------------- snapshot
-    def save(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        buf = io.BytesIO()
-        arrays = {}
-        meta = []
-        for i, (key, s) in enumerate(sorted(self.shards.items())):
-            arrays[f"bits_{i}"] = s.bits
-            meta.append((key, s.m, s.k))
-        arrays["meta_keys"] = np.array([m[0] for m in meta], dtype=object)
-        arrays["meta_mk"] = np.array([[m[1], m[2]] for m in meta], dtype=np.int64).reshape(-1, 2)
-        # no allow_pickle kwarg: savez_compressed has none — passing it
-        # just stored a stray boolean array named "allow_pickle" in the
-        # archive (the cuckoo twin was fixed in r6; parity here)
-        np.savez_compressed(buf, **arrays)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf.getvalue())
-        os.replace(tmp, path)
-
-    @classmethod
-    def load(cls, path: str, expected_per_shard: int = 1 << 16, fpp: float = 0.01) -> "ShardedBloom":
-        z = np.load(path, allow_pickle=True)
-        keys = z["meta_keys"]
-        mk = z["meta_mk"].reshape(-1, 2)
-        shards = {}
-        for i, key in enumerate(keys):
-            shards[str(key)] = BloomShard(int(mk[i][0]), int(mk[i][1]), z[f"bits_{i}"].copy())
-        return cls(shards, expected_per_shard, fpp)

@@ -3,10 +3,12 @@
 
 Consumer: the frontier-eviction path (``CrawlEngine.evict_seen``, re-crawl-
 after-TTL): a DONE offer URL older than the TTL is removed from the durable
-seen store AND from the in-memory prefilter, so the next listing sweep that
-links it re-admits it as a fresh PENDING row. A Bloom filter cannot delete;
-a cuckoo filter can — ``CrawlEngine(..., prefilter="cuckoo")`` swaps
-:class:`ShardedCuckoo` in for ``ShardedBloom`` with the same interface.
+seen store AND, when one has been built, from the in-memory prefilter, so
+the next listing sweep that links it re-admits it as a fresh PENDING row. A
+Bloom filter cannot delete; a cuckoo filter can — ``CrawlEngine(...,
+prefilter="cuckoo")`` swaps :class:`ShardedCuckoo` in for ``ShardedBloom``
+with the same interface. Like the Bloom, it is built from the seen store on
+first use and never snapshotted.
 
 (2,4)-cuckoo filter with 16-bit **reference-counted** fingerprints over
 numpy: fingerprint f = 16 low bits of the key (never 0); bucket
@@ -26,17 +28,14 @@ stays present until *it* is deleted. The second protection layer lives in
 are forwarded to ``delete_df``, so a double-eviction can never decrement a
 count that was not incremented.
 
-Capacity is a hard invariant, not best-effort: every insert path (build /
-merge / add_local) RAISES on an unplaceable fingerprint instead of silently
-dropping it (a dropped fingerprint is a future false negative). Size shards
-via ``expected_per_shard`` (exposed as ``CrawlEngine(
+Capacity is a hard invariant, not best-effort: the insert path
+(``ShardedCuckoo.build``) RAISES on an unplaceable fingerprint instead of
+silently dropping it (a dropped fingerprint is a future false negative).
+Size shards via ``expected_per_shard`` (exposed as ``CrawlEngine(
 prefilter_expected_per_shard=...)``) above the per-shard key volume.
 """
 
 from __future__ import annotations
-
-import io
-import os
 
 import numpy as np
 import pandas as pd
@@ -89,28 +88,28 @@ class CuckooFilter:
         self.counts[i, slot] = min(c, int(_COUNT_MAX))
 
     # ------------------------------------------------------------------ api
-    def insert_fp(self, i1: int, fp: int, count: int = 1) -> bool:
+    def insert_fp(self, i1: int, fp: int) -> bool:
         """Insert a fingerprint given EITHER of its buckets (the cuckoo
-        partial-key property: the alternate is i ^ h(fp)) — lets shard
-        tables of equal size merge without the original keys. An existing
+        partial-key property: the alternate is i ^ h(fp)), so kicked
+        fingerprints move without their original keys. An existing
         (bucket-pair, fp) entry absorbs the insert as a count increment."""
         i2 = self._alt(i1, fp)
         for i in (i1, i2):
             row = self.table[i]
             same = np.where((row == fp) & (self.counts[i] > 0))[0]
             if len(same):
-                self._bump(i, int(same[0]), count)
+                self._bump(i, int(same[0]), 1)
                 return True
         for i in (i1, i2):
             row = self.table[i]
             empty = np.where(self.counts[i] == 0)[0]
             if len(empty):
                 row[empty[0]] = fp
-                self.counts[i, empty[0]] = min(count, int(_COUNT_MAX))
+                self.counts[i, empty[0]] = 1
                 return True
         # cuckoo kicks — displaced (fp, count) pairs move together
         i = i1 if self._rng.integers(2) else i2
-        cur_fp, cur_cnt = fp, min(count, int(_COUNT_MAX))
+        cur_fp, cur_cnt = fp, 1
         for _ in range(MAX_KICKS):
             slot = int(self._rng.integers(SLOTS))
             cur_fp, self.table[i, slot] = int(self.table[i, slot]), cur_fp
@@ -216,29 +215,6 @@ class CuckooFilter:
         self.table[self.counts == 0] = 0
         return removed
 
-    def merge(self, other: "CuckooFilter") -> None:
-        """Union by re-homing every stored (fingerprint, count) pair (same
-        table size required — the partial-key property only preserves bucket
-        pairs across equal nb). Raises on overflow: a silently dropped
-        fingerprint would be a future false negative → duplicate fetch."""
-        assert self.nb == other.nb, "cuckoo merge requires equal table size"
-        for i, slot in zip(*np.nonzero(other.counts)):
-            ok = self.insert_fp(
-                int(i), int(other.table[i, slot]), int(other.counts[i, slot])
-            )
-            if not ok:
-                raise RuntimeError(
-                    "cuckoo shard overflow during merge: raise "
-                    "expected_per_shard above the per-shard key volume"
-                )
-
-    def copy(self) -> "CuckooFilter":
-        c = CuckooFilter(1)
-        c.nb = self.nb
-        c.table = self.table.copy()
-        c.counts = self.counts.copy()
-        return c
-
     def delete(self, h64: int) -> bool:
         """Decrement the key's (bucket, fp) count; the entry is freed only
         at zero, so colliding keys that were inserted stay present."""
@@ -271,26 +247,22 @@ class CuckooFilter:
         return in1 | in2
 
 
-def _from_blobs(nb: int, table: bytes, counts: bytes, writable: bool = True) -> CuckooFilter:
+def _from_blobs(nb: int, table: bytes, counts: bytes) -> CuckooFilter:
+    """A writable filter from its (nb, table, counts) blobs."""
     f = CuckooFilter(1)
     f.nb = int(nb)
-    f.table = np.frombuffer(table, dtype=np.uint16).reshape(int(nb), SLOTS)
-    f.counts = np.frombuffer(counts, dtype=np.uint16).reshape(int(nb), SLOTS)
-    if writable:
-        f.table = f.table.copy()
-        f.counts = f.counts.copy()
+    f.table = np.frombuffer(table, dtype=np.uint16).reshape(int(nb), SLOTS).copy()
+    f.counts = np.frombuffer(counts, dtype=np.uint16).reshape(int(nb), SLOTS).copy()
     return f
 
 
 class ShardedCuckoo:
     """dict[domain_salt → CuckooFilter] — the deletable twin of
-    bloom.ShardedBloom, duck-type compatible with it (build / merge /
-    add_local / filter_maybe_seen / save / load) plus ``delete_df`` for the
-    eviction path.
+    bloom.ShardedBloom, duck-type compatible with it (build /
+    filter_maybe_seen) plus ``delete_df`` for the eviction path.
 
-    All shards share one table size (derived from ``expected_per_shard``) so
-    separately built filters merge into the run filter by fingerprint
-    re-homing. ``fpp`` is accepted for interface parity; the (2,4)-cuckoo
+    All shards share one table size (derived from ``expected_per_shard``).
+    ``fpp`` is accepted for interface parity; the (2,4)-cuckoo
     false-positive rate is ≈ 2·SLOTS/2^16 ≈ 0.012 %, far below the Bloom's
     1 % default.
     """
@@ -352,25 +324,6 @@ class ShardedCuckoo:
             for r in rows
         }
         return cls(shards, expected_per_shard, fpp)
-
-    def merge(self, other: "ShardedCuckoo") -> None:
-        for key, f in other.shards.items():
-            if key in self.shards:
-                self.shards[key].merge(f)
-            else:
-                # copy — adopting a live reference would alias later in-place
-                # add/delete mutations back into the source filter
-                self.shards[key] = f.copy()
-
-    def add_local(self, shard_key: str, hashes) -> None:
-        f = self.shards.setdefault(shard_key, CuckooFilter(self.expected_per_shard))
-        fails = f.add_hashes(np.fromiter(hashes, dtype=np.int64))
-        if fails:
-            raise RuntimeError(
-                f"cuckoo shard overflow ({fails} keys unplaced in "
-                f"{shard_key!r}): raise expected_per_shard above the "
-                "per-shard key volume"
-            )
 
     # ----------------------------------------------------------------- test
     def filter_maybe_seen(
@@ -491,41 +444,3 @@ class ShardedCuckoo:
             removed += int(r["removed"])
         bc.unpersist()
         return removed
-
-    # ------------------------------------------------------------- snapshot
-    def save(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        buf = io.BytesIO()
-        arrays = {}
-        meta = []
-        for i, (key, f) in enumerate(sorted(self.shards.items())):
-            arrays[f"table_{i}"] = f.table
-            arrays[f"counts_{i}"] = f.counts
-            meta.append(key)
-        arrays["meta_keys"] = np.array(meta, dtype=object)
-        arrays["kind"] = np.array(["cuckoo"], dtype=object)
-        np.savez_compressed(buf, **arrays)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(buf.getvalue())
-        os.replace(tmp, path)
-
-    @classmethod
-    def load(
-        cls, path: str, expected_per_shard: int = 1 << 16, fpp: float = 0.01
-    ) -> "ShardedCuckoo":
-        z = np.load(path, allow_pickle=True)
-        shards = {}
-        for i, key in enumerate(z["meta_keys"]):
-            table = z[f"table_{i}"].copy()
-            f = CuckooFilter(1)
-            f.nb = table.shape[0]
-            f.table = table
-            # pre-refcount snapshots carry no counts — synthesize count 1
-            # per occupied slot (the semantics the old format encoded)
-            if f"counts_{i}" in z.files:
-                f.counts = z[f"counts_{i}"].copy()
-            else:
-                f.counts = (table != 0).astype(np.uint16)
-            shards[str(key)] = f
-        return cls(shards, expected_per_shard, fpp)

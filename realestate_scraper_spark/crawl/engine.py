@@ -9,9 +9,8 @@ One round =
   3. listings → link extraction → classify → canonicalize → exact anti-join
      dedupe against the seen store (O1) → new PENDING frontier rows,
   4. offers → parse cascade → refine (expressions) → one staged append,
-  5. frontier DELTA appends (inserts + status updates), seen-store append,
-     driver prefilter update from the round's new-key hashes; every output
-     job joined, then the prefilter snapshot, metrics and checkpoint.
+  5. frontier DELTA appends (inserts + status updates) and the seen-store
+     append; every output job joined, then metrics and checkpoint.
 
 Termination (ST2): per-source done when no pending pages remain (no_links),
 two consecutive listing pages yield no new offer URLs (no_new, A5 —
@@ -20,16 +19,17 @@ whole crawl. Hard-failed regions stay not-done and re-enter via
 ``retry_failed()`` (ST5); Retry-After rows re-enter IN-RUN via ``retry_at``
 (ST8, http.py:69-76).
 
-Resume (ST4): CrawlEngine.resume() rebuilds the working set + counters +
-Bloom from the run directory with AGGREGATIONS ONLY — frontier *rows* are
+Resume (ST4): CrawlEngine.resume() rebuilds the working set + counters
+from the run directory with AGGREGATIONS ONLY — frontier *rows* are
 never collected to the driver at any point in the engine's lifecycle.
 
 Scale discipline (the parts that must survive 10^10 frontier rows):
 - **No O(frontier) driver transfer.** Driver-side state is counters, the
   per-source pending listing-page sets (bounded by pagination depth — the
-  same metadata the reference keeps as ``last_page_done``), and the
-  prefilter (Bloom bitmaps or cuckoo tables, ~KB/shard). Every collect() in
-  this file is an aggregate or a metadata-scale set, never frontier rows.
+  same metadata the reference keeps as ``last_page_done``), and, once
+  something reads it, the prefilter (Bloom bitmaps or cuckoo tables,
+  ~KB/shard). Every collect() in this file is an aggregate or a
+  metadata-scale set, never frontier rows.
 - **O(batch) table writes per round.** The durable frontier is a sequence of
   delta snapshots: `insert` deltas (new URLs) and `update` deltas (status
   transitions, full rows). ``frontier()`` reconciles latest-wins with a
@@ -46,19 +46,21 @@ Scale discipline (the parts that must survive 10^10 frontier rows):
 - **Only the fused fetch+parse runs on Python workers.** On this PySpark
   4.1.2 / CPython 3.11 stack a Python task costs ~0.2 CPU-s of worker set-up
   on its own, whatever its row count, so round bookkeeping stays in the
-  JVM: the round's new-key hashes and counters come back from one
-  ``collect_list`` aggregate (O(new URLs × 8 B)), and the driver prefilter
-  (``self.bloom``, Bloom or cuckoo) absorbs them with ``add_local``. The
-  prefilter is snapshotted to ``bloom.npz`` every round and serves
-  ``resume`` and ``evict_seen``; the round loop itself does not consult it,
-  because the anti-join hashes every seen bucket either way.
+  JVM: the round's counters come back from one count aggregate over the
+  insert delta.
+- **The prefilter is a view of the seen store.** ``self.bloom`` (Bloom or
+  cuckoo) is built from the store the first time something reads it and
+  dropped whenever the store grows; nothing per round feeds it and nothing
+  snapshots it. The round loop never consults it, because the anti-join
+  hashes every seen bucket either way; ``evict_seen`` keeps a live one
+  correct across its delete.
 
 One round schedule, the same on every master: the summary aggregation
 runs first and materializes the fused cache, so the output jobs (staged,
-insert, update, then seen + deltas over the insert delta) overlap on one
-round pool over warm blocks and never recompute the Python stage; all of
-them are joined before ``bloom.npz`` and ``checkpoint.json`` are written, so
-a checkpointed round never names offers that are not yet on disk.
+insert, update, then the seen append and new-row counters over the insert
+delta) overlap on one round pool over warm blocks and never recompute the
+Python stage; all of them are joined before ``checkpoint.json`` is written,
+so a checkpointed round never names offers that are not yet on disk.
 
 The driver-side loop is the one intentionally imperative piece (the crawl is
 inherently iterative — same as the reference's `while True` pagination,
@@ -83,7 +85,11 @@ from realestate_scraper_spark.crawl import refine as refine_mod
 from realestate_scraper_spark.crawl.bloom import ShardedBloom
 from realestate_scraper_spark.crawl.seenstore import BucketedSeenStore
 from realestate_scraper_spark.functions.codegen import ref_lit
-from realestate_scraper_spark.functions.urlnorm import url_hash32
+from realestate_scraper_spark.functions.urlnorm import (
+    domain_salt,
+    url_hash32,
+    url_hash64,
+)
 from realestate_scraper_spark.schemas import (
     CHECKPOINT_SCHEMA,
     FRONTIER_SCHEMA,
@@ -105,49 +111,6 @@ _SEEN_STAGES = {"seed", "insert", "compact"}
 
 def _rows_under(path: str) -> int:
     return _rows_from_footers(path) if os.path.isdir(path) else 0
-
-
-def _collect_insert_deltas(df: DataFrame):
-    """ONE JVM aggregate over a round's insert delta returning BOTH driver
-    products:
-
-    - per-(domain#salt) new-key hash arrays that the driver prefilter
-      absorbs with ``add_local`` (O(new URLs × 8 B) collected);
-    - the (source, kind, page_idx, n) counter rows that feed the driver's
-      metadata-scale progress tracking (``_track_new_agg``).
-
-    One row per (shard, source, kind, page) group, so the collect stays
-    metadata-scale in rows. A plain ``collect_list`` keeps the job off
-    Python workers: on PySpark 4.1.2 / CPython 3.11 a Python task costs
-    ~0.2 CPU-s of worker set-up whatever its row count, which made the
-    former Arrow pack the costliest part of this job."""
-    import numpy as np
-
-    rows = (
-        df.groupBy("domain_salt", "source", "kind", "page_idx")
-        .agg(
-            F.count("*").alias("n"),
-            F.collect_list("url_hash64").alias("hashes"),
-        )
-        .collect()
-    )
-    chunks: dict[str, list] = defaultdict(list)
-    agg = []
-    for r in rows:
-        chunks[r["domain_salt"]].append(np.array(r["hashes"], dtype=np.int64))
-        agg.append(
-            {
-                "source": r["source"],
-                "kind": r["kind"],
-                "page_idx": r["page_idx"],
-                "n": r["n"],
-            }
-        )
-    deltas = {
-        shard: (arrs[0] if len(arrs) == 1 else np.concatenate(arrs))
-        for shard, arrs in chunks.items()
-    }
-    return deltas, agg
 
 
 class CrawlEngine:
@@ -235,7 +198,6 @@ class CrawlEngine:
         self.t_photos = ParquetTable(run_dir, "photos")
         self.t_quarantine = ParquetTable(run_dir, "quarantine")
         self.t_metrics = ParquetTable(run_dir, "metrics")
-        self.bloom_path = os.path.join(run_dir, "bloom.npz")
         # Bucketed URL-seen store: no seen-side exchange in the per-round
         # anti-join; file count bounded by periodic compaction. The bucket
         # count is a one-time table choice — default it to ≥2× the session
@@ -261,8 +223,7 @@ class CrawlEngine:
         )
         # URL-seen prefilter: "bloom" (default) or "cuckoo" — the deletable
         # variant (crawl/cuckoo.ShardedCuckoo, duck-type identical) that the
-        # evict_seen() re-crawl-after-TTL path needs. A resumed run must pass
-        # the same choice (the snapshot formats differ).
+        # evict_seen() re-crawl-after-TTL path needs.
         if prefilter == "cuckoo":
             from realestate_scraper_spark.crawl.cuckoo import ShardedCuckoo
 
@@ -274,15 +235,15 @@ class CrawlEngine:
         # outgrows this; size it above the expected per-(domain#salt) URL
         # volume. Default 2^16 suits the sandbox corpora; production sizes
         # it to frontier/(domains×salts).
-        pf_kw = (
-            {"expected_per_shard": prefilter_expected_per_shard}
-            if prefilter_expected_per_shard is not None
-            else {}
-        )
-        self.bloom = self._pf_cls(fpp=bloom_fpp, **pf_kw)
+        self._pf_kw = {"fpp": bloom_fpp}
+        if prefilter_expected_per_shard is not None:
+            self._pf_kw["expected_per_shard"] = prefilter_expected_per_shard
+        # built from the seen store on first read of ``bloom``; None again
+        # whenever the store grows (seed, every round's seen append)
+        self._bloom = None
         # populated by evict_seen(): {"evicted", "affected_shards",
-        # "total_shards", "rebuilt_rows"} — the O(affected shards) rebuild
-        # evidence (tests + eviction bench read it)
+        # "rebuilt_rows"} — the O(affected shards) rebuild evidence (tests +
+        # eviction bench read it)
         self.last_evict_stats: dict | None = None
         # cached PENDING working set (full frontier-schema rows); None until
         # seed()/resume(). Rebuilt per round from O(batch) unions; lineage
@@ -338,6 +299,29 @@ class CrawlEngine:
         with self._phase(name):
             return fn(*args, **kwargs)
 
+    # ----------------------------------------------------------- prefilter
+    @property
+    def bloom(self):
+        """The URL-seen prefilter (Bloom or cuckoo): a view of the seen
+        store, built the first time it is read after the store last grew.
+        The round loop never reads it (the exact anti-join hashes every seen
+        bucket either way), so a crawl that nobody probes never builds it."""
+        if self._bloom is None:
+            with self._phase("bloom_build"):
+                self._bloom = self._pf_cls.build(
+                    self._seen_keyed(), **self._pf_kw
+                )
+        return self._bloom
+
+    def _seen_keyed(self) -> DataFrame:
+        """The seen store under the prefilter's keys — the same
+        (domain_salt, url_hash64) the frontier rows carry, derived from
+        url_canon."""
+        return self._seen().select(
+            domain_salt(F.col("url_canon"), self.n_salts).alias("domain_salt"),
+            url_hash64(F.col("url_canon")).alias("url_hash64"),
+        )
+
     # ------------------------------------------------------------- seeding
     def seed(self, seeds: list[tuple[str, str]]) -> None:
         if self.robots_rules is None:
@@ -346,13 +330,12 @@ class CrawlEngine:
         frontier_mod.assert_frontier_schema(df)
         # The seed frame is a driver-local literal, so the three output
         # steps below — durable seed snapshot, bucketed seen store, and the
-        # ONE metadata-scale collect that feeds the prefilter and the
-        # counters — share no data dependency and run as
-        # concurrent jobs (each recomputes the trivial local plan). The
-        # serialized form paid ~1 s of first-job latency per step on a
-        # fresh session. expected-per-shard is preserved (a fresh
-        # default-arg filter silently dropped the ctor knob before).
+        # metadata-scale counter aggregate — share no data dependency and
+        # run as concurrent jobs (each recomputes the trivial local plan).
+        # The serialized form paid ~1 s of first-job latency per step on a
+        # fresh session.
         self.seen_store.reset()
+        self._bloom = None
         with ThreadPoolExecutor(max_workers=2) as pool:
             w_fut = pool.submit(
                 self._tagged,
@@ -366,32 +349,13 @@ class CrawlEngine:
                 self._tagged, "seed_seen", self.seen_store.append, df
             )
             with self._phase("seed_bootstrap"):
-                rows = df.select(
-                    "domain_salt", "url_hash64", "source", "kind", "page_idx"
-                ).collect()
+                self._track_new_agg(self._new_rows_agg(df))
             w_fut.result()
             s_fut.result()
         # lazy, schema-pinned re-read: the durable snapshot (not the driver
         # literal) roots the working set, so it stays recomputable from disk
         snap = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
             self.t_frontier.snapshot_paths()[0]
-        )
-        self.bloom = self._pf_cls(
-            fpp=self.bloom_fpp,
-            expected_per_shard=self.bloom.expected_per_shard,
-        )
-        by_salt: dict[str, list[int]] = defaultdict(list)
-        counts: dict[tuple, int] = defaultdict(int)
-        for r in rows:
-            by_salt[r["domain_salt"]].append(r["url_hash64"])
-            counts[(r["source"], r["kind"], r["page_idx"])] += 1
-        for salt, hashes in by_salt.items():
-            self.bloom.add_local(salt, hashes)
-        self._track_new_agg(
-            [
-                {"source": s, "kind": k, "page_idx": p, "n": n}
-                for (s, k, p), n in counts.items()
-            ]
         )
         # snap is a disk-rooted scan already — checkpointing it would only
         # add one more tiny job; the working set stays lazily recomputable
@@ -477,10 +441,6 @@ class CrawlEngine:
                 eng._pending_listing_pages.setdefault(r["source"], set()).add(
                     r["page_idx"]
                 )
-        if os.path.exists(eng.bloom_path):
-            eng.bloom = eng._pf_cls.load(eng.bloom_path, fpp=eng.bloom_fpp)
-        elif fr is not None:
-            eng.bloom = eng._pf_cls.build(fr, fpp=eng.bloom_fpp)
         return eng
 
     # ---------------------------------------------------------- round loop
@@ -617,14 +577,15 @@ class CrawlEngine:
         protecting the crawl — the 10^10-frontier need named in SURVEY §7.4.)
 
         Deletes from the durable bucketed store (bucket-parallel broadcast
-        anti-join rewrite, crash-atomic) and from the in-memory prefilter:
-        a cuckoo prefilter (``prefilter="cuckoo"``) vector-deletes
-        fingerprints in place, distributed per shard — the reason it exists
-        (north_rule "cuckoo-filter fallback for deletable entries"); a Bloom
-        prefilter cannot delete and is rebuilt SHARD-LOCALLY from the
-        post-delete store — only the (domain#salt) shards that actually
-        lost keys are re-keyed and re-built, O(affected shards), not
-        O(seen set).
+        anti-join rewrite, crash-atomic). A prefilter that was never built
+        needs nothing: its first read builds from the post-delete store. A
+        live one is kept correct: a cuckoo prefilter (``prefilter="cuckoo"``)
+        vector-deletes fingerprints in place, distributed per shard — the
+        reason it exists (north_rule "cuckoo-filter fallback for deletable
+        entries"); a Bloom prefilter cannot delete and is rebuilt
+        SHARD-LOCALLY from the post-delete store — only the (domain#salt)
+        shards that actually lost keys are re-keyed and re-built,
+        O(affected shards), not O(seen set).
 
         Exact-delete handshake: only keys the durable store ACTUALLY held
         (semi-join against the bucketed scan, computed BEFORE the delete)
@@ -636,6 +597,9 @@ class CrawlEngine:
         fr = self.frontier()
         if fr is None:
             return 0
+        # read BEFORE the delete: building after it and then deleting would
+        # decrement cuckoo refcounts that colliding kept keys own
+        live = self._bloom
         evict = fr.filter(
             (F.col("kind") == "offer")
             & (F.col("status") == STATUS_DONE)
@@ -651,8 +615,7 @@ class CrawlEngine:
             n = self.seen_store.delete(present)
         if n == 0:
             self.last_evict_stats = {
-                "evicted": 0, "affected_shards": 0,
-                "total_shards": len(self.bloom.shards), "rebuilt_rows": 0,
+                "evicted": 0, "affected_shards": 0, "rebuilt_rows": 0,
             }
             return 0
         # O(shards) metadata collect — which (domain#salt) shards lost keys
@@ -660,46 +623,34 @@ class CrawlEngine:
             r[0] for r in present.select("domain_salt").distinct().collect()
         ]
         rebuilt_rows = 0
-        if hasattr(self.bloom, "delete_df"):
+        if live is None:
+            pass  # nothing to maintain: the first read builds post-delete
+        elif hasattr(live, "delete_df"):
             # affected-shards list bounds the broadcast to the shards that
             # actually lost keys — O(affected), never O(total filter)
             with self._phase("evict_prefilter"):
-                self.bloom.delete_df(present, shard_keys=salts)
+                live.delete_df(present, shard_keys=salts)
         else:
-            from realestate_scraper_spark.functions.urlnorm import (
-                domain_salt as domain_salt_expr,
-            )
-
             # shard-local rebuild: re-key + re-build ONLY the shards that
             # lost keys; untouched shards keep their bitmaps as-is
             with self._phase("evict_prefilter"):
                 keyed = (
-                    self.seen_store.df()
-                    .withColumn(
-                        "domain_salt",
-                        domain_salt_expr(F.col("url_canon"), self.n_salts),
-                    )
+                    self._seen_keyed()
                     .filter(F.col("domain_salt").isin(salts))
-                    .withColumn("url_hash64", F.xxhash64(F.col("url_canon")))
-                ).localCheckpoint()
-                rebuilt_rows = keyed.count()
-                partial = self._pf_cls.build(
-                    keyed,
-                    expected_per_shard=self.bloom.expected_per_shard,
-                    fpp=self.bloom_fpp,
+                    .localCheckpoint()
                 )
+                rebuilt_rows = keyed.count()
+                partial = self._pf_cls.build(keyed, **self._pf_kw)
                 for s in salts:
                     if s in partial.shards:
-                        self.bloom.shards[s] = partial.shards[s]
+                        live.shards[s] = partial.shards[s]
                     else:
                         # every key of the shard was evicted — absent shard
                         # reads definitely-new, exactly right
-                        self.bloom.shards.pop(s, None)
-        self.bloom.save(self.bloom_path)
+                        live.shards.pop(s, None)
         self.last_evict_stats = {
             "evicted": n,
             "affected_shards": len(salts),
-            "total_shards": len(self.bloom.shards),
             "rebuilt_rows": rebuilt_rows,
         }
         return n
@@ -948,14 +899,15 @@ class CrawlEngine:
                 self.seen_store.append(new_df)
 
         def _deltas():
+            # the new rows' driver counters: one JVM count aggregate
             with self._phase("insert_deltas"):
-                return _collect_insert_deltas(new_df)
+                return self._new_rows_agg(new_df)
 
         # ---- the round-output jobs overlap: staged ∥ insert ∥ update first,
-        # then (seen table ∥ prefilter deltas + driver counters) over the
-        # insert delta while the others may still be writing. ~3-5 s/round
-        # of serialized small-job latency at depth-bench load becomes the
-        # max() of the chains. Every job is joined before the checkpoint,
+        # then (seen table ∥ driver counters) over the insert delta while
+        # the others may still be writing. ~3-5 s/round of serialized
+        # small-job latency at depth-bench load becomes the max() of the
+        # chains. Every job is joined before the checkpoint,
         # so a checkpointed round's offers are already durable.
         new_n = 0
         new_offer_counts: dict[str, int] = defaultdict(int)
@@ -975,9 +927,8 @@ class CrawlEngine:
                 seen_fut = pool.submit(_seen)
                 deltas_fut = pool.submit(_deltas)
                 seen_fut.result()
-                delta, agg = deltas_fut.result()
-                for shard_key, arr in delta.items():
-                    self.bloom.add_local(shard_key, arr)
+                self._bloom = None  # the seen store grew
+                agg = deltas_fut.result()
                 self._track_new_agg(agg)
                 for r in agg:
                     new_n += r["n"]
@@ -1018,7 +969,6 @@ class CrawlEngine:
                 pass
         else:
             self._pending = nxt.select(*FRONTIER_COLS)
-        self.bloom.save(self.bloom_path)
 
         # ---- stop rules (A5 no-new streak): a source with k listing pages
         # resolved this round and zero new yield advances its streak by k
@@ -1297,9 +1247,6 @@ class CrawlEngine:
                     "stop_reason": "fetch_fail",
                     "processed_offers_last_run": int(self._offers_total),
                     "round": self.round_idx,
-                    "bloom_snapshot": self.bloom_path
-                    if os.path.exists(self.bloom_path)
-                    else None,
                 }
                 continue
             done = reason is not None or drained
@@ -1310,9 +1257,6 @@ class CrawlEngine:
                 "stop_reason": reason if reason else ("no_links" if done else None),
                 "processed_offers_last_run": int(self._offers_total),
                 "round": self.round_idx,
-                "bloom_snapshot": self.bloom_path
-                if os.path.exists(self.bloom_path)
-                else None,
             }
         tmp = self.checkpoint_path + ".tmp"
         with open(tmp, "w") as f:
@@ -1328,7 +1272,6 @@ class CrawlEngine:
             (
                 src, v["region"], v["done"], v["last_page_done"],
                 v["stop_reason"], v["processed_offers_last_run"], v["round"],
-                v["bloom_snapshot"],
             )
             for src, v in sorted(state.items())
         ]

@@ -43,8 +43,9 @@ commits via atomic snapshot swap). The sandbox has no Iceberg jar, so
 Spark's native bucketed tables stand in — same join physics.
 
 Replaces: the reference's in-memory DedupeSet (scrapper/core/dedup.py:17-27)
-as the durable half of the dedupe-before-fetch gate; the Bloom prefilter
-(crawl/bloom.py) remains the cheap first pass in front of this exact check.
+as the durable half of the dedupe-before-fetch gate. The Bloom/cuckoo
+prefilter (crawl/bloom.py, crawl/cuckoo.py) is derived from this store on
+demand; the crawl round loop runs the exact check alone.
 """
 
 from __future__ import annotations

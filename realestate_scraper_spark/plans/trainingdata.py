@@ -248,15 +248,20 @@ def minhash_band_pairs(
     # (encoded as an exact string — never a lossy hash, a collision would
     # FABRICATE a candidate pair), pairs agreeing on several bands collapse
     # in the same DISTINCT the union needed anyway. Same pair set, n_bands
-    # joins → 1.
+    # joins → 1. ``concat`` (not ``concat_ws``, which skips NULLs): a NULL
+    # signature makes the band key NULL, so it never joins — the per-band
+    # equality join's semantics.
     keys = F.array(
         *[
-            F.concat_ws(
-                "|",
+            F.concat(
                 F.lit(str(band)),
                 *[
-                    F.col(f"sig{band * rows_per_band + j}")
+                    part
                     for j in range(rows_per_band)
+                    for part in (
+                        F.lit("|"),
+                        F.col(f"sig{band * rows_per_band + j}").cast("string"),
+                    )
                 ],
             )
             for band in range(n_bands)

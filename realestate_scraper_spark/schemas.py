@@ -155,7 +155,6 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("stop_reason", T.StringType(), True),
         T.StructField("processed_offers_last_run", T.LongType(), False),
         T.StructField("round", T.IntegerType(), False),
-        T.StructField("bloom_snapshot", T.StringType(), True),  # path of Bloom shard dump
     ]
 )
 

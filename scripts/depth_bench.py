@@ -30,6 +30,14 @@ REPO = Path(__file__).resolve().parents[1]
 WORKER = REPO / "scripts" / "depth_worker.py"
 MARKER = "## Round-loop amortization at depth"
 
+
+def heading_start(text: str, *markers: str) -> int | None:
+    """Offset of the first of ``markers`` that is a whole heading line of
+    ``text`` (a prose mention never counts), or None."""
+    found = [re.search(rf"^{re.escape(h)}[ \t]*$", text, re.M) for h in markers]
+    return min((m.start() for m in found if m), default=None)
+
+
 def replace_own_section(
     text: str, lines: list[str], marker: str = MARKER
 ) -> str:
@@ -45,11 +53,10 @@ def replace_own_section(
     r6 verdict's one regression). Pinned by
     tests/test_report_sections.py."""
     block = "\n".join(lines).rstrip() + "\n"
-    m = re.search(rf"^{re.escape(marker)}[ \t]*$", text, re.M)
-    if m is None:
+    start = heading_start(text, marker)
+    if start is None:
         return text.rstrip() + "\n\n" + block
-    start = m.start()
-    nxt = text.find("\n## ", m.end())
+    nxt = text.find("\n## ", start)
     tail = "" if nxt == -1 else text[nxt + 1:]
     return (text[:start].rstrip() + "\n\n" + block + "\n" + tail).rstrip() + "\n"
 

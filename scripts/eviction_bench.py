@@ -84,13 +84,7 @@ def synth_done_state(spark, eng, n_rows: int, old_cond):
     eng.t_frontier.append(df, round_idx=0, stage="synth")
     snap = eng.frontier()
     eng.seen_store.append(snap)
-    eng.bloom.merge(
-        eng._pf_cls.build(
-            snap,
-            expected_per_shard=eng.bloom.expected_per_shard,
-            fpp=eng.bloom_fpp,
-        )
-    )
+    eng.bloom  # builds the live filter from the store that now holds snap
     eng.round_idx = 10
 
 

@@ -108,7 +108,7 @@ def main() -> None:
         f"same crawl on `local-cluster[N, {CORES_PER_EXECUTOR}, "
         f"{2048 * CORES_PER_EXECUTOR}m]`: N separate executor JVMs, each with its",
         "own heap, python worker pool and codegen cache; torrent broadcast (page",
-        "store + per-round prefilter deltas) and every shuffle cross real process",
+        "store + robots rules) and every shuffle cross real process",
         "boundaries. Executor count — not thread count — is the scaled axis.",
         "Min-of-2 alternating trials per level (the depth-bench noise protocol;",
         "a shape check vs the thread-mode tables, not a new headline).",

@@ -22,10 +22,25 @@ import sys
 import time
 from pathlib import Path
 
+from depth_bench import heading_start
+
 REPO = Path(__file__).resolve().parents[1]
 WORKER = REPO / "scripts" / "scaling_worker.py"
 
 N_LO, N_HI = 4, 16
+# headings other benches append after the sections this script owns
+LATER_SECTIONS = (
+    "## Eviction at volume",
+    "## Long-horizon soak",
+    "## Ceiling-normalized",
+    "## Round-loop amortization at depth",
+)
+
+
+def later_sections(old: str) -> str:
+    """``old`` from its first ``LATER_SECTIONS`` heading line on, or ""."""
+    start = heading_start(old, *LATER_SECTIONS)
+    return "" if start is None else old[start:]
 
 
 def _mp_work(n: int) -> int:
@@ -210,24 +225,8 @@ median isolates the engine from that noise. Raw JSON (median samples):
     out_dir = REPO / "BENCH"
     out_dir.mkdir(exist_ok=True)
     path = out_dir / "BASELINE.md"
-    # replace only the scaling sections this script owns — preserve every
-    # later section other benches append (eviction, soak, normalized
-    # deltas, the depth sweep + fit notes)
-    tail = ""
-    if path.exists():
-        old = path.read_text()
-        idxs = [
-            old.index(m)
-            for m in (
-                "## Eviction at volume",
-                "## Long-horizon soak",
-                "## Ceiling-normalized",
-                "## Round-loop amortization at depth",
-            )
-            if m in old
-        ]
-        if idxs:
-            tail = old[min(idxs):]
+    # replace only the scaling sections this script owns
+    tail = later_sections(path.read_text()) if path.exists() else ""
     path.write_text(md.rstrip() + "\n\n" + tail if tail else md)
     print(
         json.dumps(

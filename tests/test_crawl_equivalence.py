@@ -168,14 +168,31 @@ def test_checkpoint_and_metrics_written(engine_run, spark):
 
 def test_kill_and_resume_equals_uninterrupted(spark, corpus, tmp_path_factory, engine_run):
     """ST4: stop after 2 rounds, resume in a fresh engine, final tables equal
-    the uninterrupted run's."""
+    the uninterrupted run's. The run dir holds no prefilter snapshot, and
+    resume ignores one left by an older run (file and checkpoint key); the
+    resumed engine's filter, built from the seen store on first read, has
+    no false negative over the uninterrupted run's frontier."""
+    import json
+    import os
+
     _, _, graph = corpus
     run_dir = str(tmp_path_factory.mktemp("crawl_resume"))
     eng1 = CrawlEngine(spark, run_dir, graph, n_salts=2)
     eng1.seed(seed_urls())
     eng1.run(max_rounds=2)
+    snapshot = os.path.join(run_dir, "bloom.npz")
+    assert not os.path.exists(snapshot)
+    with open(eng1.checkpoint_path) as f:
+        state = json.load(f)
+    for v in state.values():
+        v["bloom_snapshot"] = snapshot
+    with open(eng1.checkpoint_path, "w") as f:
+        json.dump(state, f)
+    with open(snapshot, "wb") as f:
+        f.write(b"not a filter")
 
     eng2 = CrawlEngine.resume(spark, run_dir, graph, n_salts=2)
+    assert eng2.checkpoint_df().count() == len(state)
     eng2.run(max_rounds=20)
 
     base, _ = engine_run
@@ -185,6 +202,10 @@ def test_kill_and_resume_equals_uninterrupted(spark, corpus, tmp_path_factory, e
     fa = {r["url_canon"] for r in base.frontier().collect()}
     fb = {r["url_canon"] for r in eng2.frontier().collect()}
     assert fa == fb
+    flagged = eng2.bloom.filter_maybe_seen(
+        base.frontier().select("url_hash64", "domain_salt")
+    )
+    assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_resume_preserves_fetch_fail_state(spark, tmp_path):

@@ -83,23 +83,22 @@ def test_cuckoo_prefilter_crawl_equals_bloom(spark, cuckoo_run, tmp_path_factory
     assert eng.offers().count() == ref.offers().count()
 
 
-def test_sharded_cuckoo_save_load_delete(spark, cuckoo_run, tmp_path):
-    from realestate_scraper_spark.crawl.cuckoo import ShardedCuckoo
-
+def test_sharded_cuckoo_delete(spark, cuckoo_run):
+    """The cuckoo filter built from the crawl's seen store holds every
+    frontier URL, and deleting one key flips exactly that key to new."""
     eng, _ = cuckoo_run
-    path = str(tmp_path / "cuckoo.npz")
-    eng.bloom.save(path)
-    loaded = ShardedCuckoo.load(path)
-    assert set(loaded.shards) == set(eng.bloom.shards)
     fr = eng.frontier().select("url_hash64", "domain_salt")
-    flagged = loaded.filter_maybe_seen(fr)
+    flagged = eng.bloom.filter_maybe_seen(fr)
     # no false negatives on inserted keys
     assert flagged.filter(~F.col("maybe_seen")).count() == 0
     # delete one key → that key (and only structurally-colliding ones) drops
-    one = fr.limit(1)
-    assert loaded.delete_df(one) == 1
-    again = loaded.filter_maybe_seen(one)
+    one = fr.limit(1).localCheckpoint()
+    assert eng.bloom.delete_df(one) == 1
+    again = eng.bloom.filter_maybe_seen(one)
     assert again.filter(F.col("maybe_seen")).count() == 0
+    # the key is still in the store: drop the filter so the next read
+    # rebuilds it from the store for the tests after this one
+    eng._bloom = None
 
 
 def test_evict_seen_readmits_after_ttl(spark, cuckoo_run):
@@ -152,56 +151,27 @@ def test_cuckoo_refcount_collision_survives_delete():
     assert not f.maybe_contains(np.array([h1, h2])).any()
 
 
-def test_cuckoo_insert_paths_raise_on_overflow():
-    """No insert path may silently drop a fingerprint (a dropped
-    fingerprint is a future false negative → duplicate fetch): add_local
-    and merge raise like build already did."""
-    import pytest as _pytest
-
+def test_cuckoo_insert_paths_raise_on_overflow(spark):
+    """The insert path may not silently drop a fingerprint (a dropped
+    fingerprint is a future false negative → duplicate fetch): build
+    raises when a shard outgrows its capacity."""
     from realestate_scraper_spark.crawl.cuckoo import ShardedCuckoo
 
-    s = ShardedCuckoo(expected_per_shard=8)
-    with _pytest.raises(RuntimeError, match="overflow"):
-        s.add_local("d#0", list(range(1, 500)))
-
-    # bucket-spread keys: 10 fit a capacity-8 shard (16 slots), 20 cannot
-    a = ShardedCuckoo(expected_per_shard=8)
-    a.add_local("d#1", [(i << 16) | (i + 1) for i in range(10)])
-    b = ShardedCuckoo(expected_per_shard=8)
-    b.add_local("d#1", [(i << 16) | (i + 1) for i in range(100, 110)])
-    with _pytest.raises(RuntimeError, match="overflow"):
-        a.merge(b)
-
-
-def test_cuckoo_merge_copies_adopted_shards(tmp_path):
-    """Adopting a shard on merge stores a COPY — mutating the merged filter
-    must not alias back into the source (ADVICE r5)."""
-    import numpy as np
-
-    from realestate_scraper_spark.crawl.cuckoo import ShardedCuckoo
-
-    a, b = ShardedCuckoo(), ShardedCuckoo()
-    b.add_local("d#1", [42])
-    a.merge(b)
-    a.shards["d#1"].delete(42)
-    assert b.shards["d#1"].maybe_contains(np.array([42])).all()
-    # save/load round-trips the refcounts (collision pair stays a pair)
-    c = ShardedCuckoo()
-    c.add_local("d#2", [7])
-    h2 = 7 + (c.shards["d#2"].nb << 16)
-    c.add_local("d#2", [h2])
-    path = str(tmp_path / "c.npz")
-    c.save(path)
-    loaded = ShardedCuckoo.load(path)
-    assert loaded.shards["d#2"].delete(7)
-    assert loaded.shards["d#2"].maybe_contains(np.array([h2])).all()
+    df = spark.range(1, 500).select(
+        F.lit("d#0").alias("domain_salt"), F.col("id").alias("url_hash64")
+    )
+    with pytest.raises(RuntimeError, match="overflow"):
+        ShardedCuckoo.build(df, expected_per_shard=8)
+    # the same keys fit a shard sized for them
+    assert ShardedCuckoo.build(df, expected_per_shard=1024).shards
 
 
 def _synth_done_state(spark, eng, n_rows: int, old_cond):
     """Fabricate a frontier of ``n_rows`` DONE offer URLs (those matching
     ``old_cond`` discovered at round 0, the rest at round 10), push them
-    into the durable seen store and the prefilter — the exact state a long
-    crawl leaves behind, without paying for the crawl."""
+    into the durable seen store and read the prefilter so it is live — the
+    exact state a long, probed crawl leaves behind, without paying for the
+    crawl."""
     from realestate_scraper_spark.functions.urlnorm import (
         domain_salt as domain_salt_expr,
     )
@@ -236,13 +206,7 @@ def _synth_done_state(spark, eng, n_rows: int, old_cond):
     snap = eng.frontier()
     eng.seen_store.ensure_registered()
     eng.seen_store.append(snap)
-    eng.bloom.merge(
-        eng._pf_cls.build(
-            snap,
-            expected_per_shard=eng.bloom.expected_per_shard,
-            fpp=eng.bloom_fpp,
-        )
-    )
+    eng.bloom  # builds the live filter from the store that now holds snap
     eng.round_idx = 10
     return snap
 

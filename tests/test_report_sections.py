@@ -77,6 +77,22 @@ def test_replace_with_non_default_marker():
     assert out.index("depth body") < out.index("NEW") < out.index("## After")
 
 
+def test_scaling_bench_keeps_later_sections_by_heading_only():
+    """scaling_bench keeps every section another bench appended after its
+    own; a prose mention of such a heading inside its own section is not
+    where the kept tail starts."""
+    from scaling_bench import later_sections
+
+    text = (
+        "# T\n\n## Scaling\n\nOLD, see `## Long-horizon soak` below.\n\n"
+        "## Eviction at volume\n\nevict\n\n## Long-horizon soak\n\nsoak\n"
+    )
+    assert later_sections(text) == (
+        "## Eviction at volume\n\nevict\n\n## Long-horizon soak\n\nsoak\n"
+    )
+    assert later_sections("# T\n\n## Scaling\n\nbody\n") == ""
+
+
 def test_replace_appends_when_absent():
     text = "# T\n\n## Keep\n\nx\n"
     out = replace_own_section(text, [MARKER, "", "NEW"])

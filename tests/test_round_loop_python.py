@@ -2,21 +2,22 @@
 
 On PySpark 4.1.2 / CPython 3.11 a Python task costs ~0.2 CPU-s of worker
 set-up on its own, whatever its row count, so the round's bookkeeping
-(insert deltas, prefilter updates, counters, the exact dedup check) runs as
-JVM plans. These tests read the physical plan of every SQL execution a
-crawl's ``run()`` submits from the SQL status store (which works with
-``spark.ui.enabled=false``), and check that the driver prefilter the loop
-grows from the JVM deltas has no false negatives.
+(new-row counters, the exact dedup check) runs as JVM plans. These tests
+read the physical plan of every SQL execution a crawl's ``run()`` submits
+from the SQL status store (which works with ``spark.ui.enabled=false``).
+The round loop feeds no prefilter: the filter is a view of the seen
+store, built on first read and dropped whenever the store grows, so the
+tests also check that it has no false negatives whenever it is read.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from realestate_scraper_spark.crawl.bloom import ShardedBloom
 from realestate_scraper_spark.crawl.engine import CrawlEngine
 from realestate_scraper_spark.sources.synth import build_corpus, seed_urls
 
@@ -65,11 +66,36 @@ def test_run_plans_keep_python_to_fused_fetch_parse(crawl):
     assert fused > 0, "the fused fetch+parse stage never showed up"
 
 
+def _false_negatives(eng, fr) -> int:
+    flagged = eng.bloom.filter_maybe_seen(fr.select("url_hash64", "domain_salt"))
+    return flagged.filter(~F.col("maybe_seen")).count()
+
+
+def test_insert_deltas_collect_no_hashes(crawl):
+    """The round's insert-delta job returns counters only: no per-URL hash
+    list travels to the driver."""
+    _, _, during = crawl
+    tagged = [plan for desc, plan in during.values() if desc == "insert_deltas"]
+    assert tagged
+    for plan in tagged:
+        assert "collect_list" not in plan, plan
+
+
 def test_prefilter_has_no_false_negatives_after_crawl(crawl):
-    """Every frontier URL reads maybe_seen on the driver prefilter the loop
-    grew from the JVM insert deltas, and on its bloom.npz snapshot."""
+    """Every frontier URL reads maybe_seen on the filter built from the seen
+    store, and the crawl leaves no prefilter snapshot in its run dir."""
     eng, _, _ = crawl
-    fr = eng.frontier().select("url_hash64", "domain_salt")
-    for pf in (eng.bloom, ShardedBloom.load(eng.bloom_path)):
-        flagged = pf.filter_maybe_seen(fr)
-        assert flagged.filter(~F.col("maybe_seen")).count() == 0
+    assert not os.path.exists(os.path.join(eng.run_dir, "bloom.npz"))
+    assert _false_negatives(eng, eng.frontier()) == 0
+
+
+def test_prefilter_read_mid_crawl_follows_later_rounds(spark, tmp_path):
+    """A filter read after round 1 is dropped when later rounds grow the
+    seen store: read again after the crawl, it covers every frontier URL."""
+    _, _, graph = build_corpus(seed=42, n_pages=2, cards_per_page=4)
+    eng = CrawlEngine(spark, str(tmp_path / "mid"), graph, n_salts=2)
+    eng.seed(seed_urls())
+    eng.run(max_rounds=1)
+    assert eng.bloom.shards
+    assert eng.run()["rounds"] > 0
+    assert _false_negatives(eng, eng.frontier()) == 0

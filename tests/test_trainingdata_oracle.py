@@ -67,6 +67,19 @@ def test_minhash_bands_parametrized_wider(spark):
     assert missed == 0, f"{missed} true near-dup pairs missed every band"
 
 
+def test_minhash_band_key_null_never_joins(spark):
+    """A NULL signature makes its band key NULL, so it never joins — the
+    per-band equality join's semantics. (5, NULL) and (NULL, 5) must not
+    collide in the one 2-row band."""
+    from realestate_scraper_spark.plans.trainingdata import minhash_band_pairs
+
+    sigs = spark.createDataFrame(
+        [(1, None, 5), (2, 5, None)], "doc_id long, sig0 long, sig1 long"
+    )
+    pairs = minhash_band_pairs(spark, None, n_seeds=2, rows_per_band=2, sigs=sigs)
+    assert pairs.collect() == []
+
+
 def test_simhash_parametrized_wider(spark):
     """simhash() at production-ish width (48 bits): deterministic, long-
     valued, and near-dup tokens-apart docs stay within a small Hamming
