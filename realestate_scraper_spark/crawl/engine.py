@@ -127,7 +127,7 @@ class CrawlEngine:
         no_new_stop: int = 2,
         real_sleep: bool = False,
         bloom_fpp: float = 0.01,
-        append_coalesce: int | str | None = "auto",
+        append_coalesce: int | str = "auto",
         robots_rules: dict | None = None,
         max_transient_attempts: int = 3,
         lookahead: int = 0,
@@ -160,8 +160,7 @@ class CrawlEngine:
         self.bloom_fpp = bloom_fpp
         # per-round append width: "auto" follows the executor pool so the
         # staged/insert/update write stages scale with the cluster (file
-        # count stays bounded by run-end compaction); None = leave the
-        # write parallelism to the upstream plan.
+        # count stays bounded by run-end compaction).
         self.append_coalesce = (
             max(4, dp) if append_coalesce == "auto" else append_coalesce
         )
@@ -270,18 +269,15 @@ class CrawlEngine:
         # same as the reference's process-lifetime limiter (http.py:13-21).
         self._salt_clock: dict[str, float] = {}
         self._wall_t0: float | None = None
-        # cumulative per-phase wall (driver-observed) across the run —
-        # feeds scripts/depth_bench.py's fixed-cost attribution; always on
-        # (two time.monotonic() calls per phase, negligible)
+        # cumulative driver wall per phase across the run (always on: two
+        # time.monotonic() calls per phase); scaling_bench joins it with jobs
         self.phase_times: dict[str, float] = defaultdict(float)
 
     @contextmanager
     def _phase(self, name: str):
         # tag every job submitted from this (thread, phase) with the phase
-        # name — thread-local, so the overlapped staging/insert/update
-        # threads each label their own jobs. Event logs / the UI then carry
-        # an exact job→phase map; the r5/r6 inverse-scaling attributions
-        # came from exactly this tagging (previously ad-hoc).
+        # name — thread-local, so the overlapped pool threads each label
+        # their own jobs and Spark's status store maps every job to a phase
         sc = self.spark.sparkContext
         prev = sc.getLocalProperty("spark.job.description")
         sc.setLocalProperty("spark.job.description", name)
@@ -700,11 +696,7 @@ class CrawlEngine:
         so this is a ``repartition`` exchange barrier. The shuffled rows are
         post-parse (no html payload), so the exchange is metadata-cheap;
         upstream keeps full parallelism, the write emits N files."""
-        return (
-            df.repartition(self.append_coalesce)
-            if self.append_coalesce
-            else df
-        )
+        return df.repartition(self.append_coalesce)
 
     def _eligible_pending_total(self) -> int:
         return sum(
@@ -796,7 +788,7 @@ class CrawlEngine:
         for r in summary:
             if (
                 r["kind"] == "listing"
-                and not self._is_requeue(r)
+                and not r["requeue"]  # re-enters PENDING (ST8)
                 # MISSING = beyond-end-of-pagination (404 past the last
                 # page): no content was observed, so it neither feeds the
                 # A5 no-new streak nor counts as content
@@ -947,7 +939,7 @@ class CrawlEngine:
         # only ST8 transient rows re-enter PENDING via the update delta;
         # when the round had none (the common case), skip the read-back —
         # it would add a dead parquet scan to the working-set plan per round
-        requeue_n = sum(r["n"] for r in summary if self._is_requeue(r))
+        requeue_n = sum(r["n"] for r in summary if r["requeue"])
         if upd_n and requeue_n:
             requeues = (
                 self.spark.read.schema(FRONTIER_SCHEMA)
@@ -1084,12 +1076,6 @@ class CrawlEngine:
             return None
         return self.spark.read.parquet(*paths).select("url_canon")
 
-    def _is_requeue(self, r) -> bool:
-        """Does this summary row re-enter PENDING under ST8? (The verdict is
-        computed IN the summary aggregation — the collect never carries the
-        raw attempts dimension.)"""
-        return bool(r["requeue"])
-
     def _collect_fetch_summary(self, pages: DataFrame) -> list:
         """One aggregation over the round's page rows → the driver's
         bookkeeping rows. Cardinality is structurally bounded: ``attempts``
@@ -1200,7 +1186,7 @@ class CrawlEngine:
     def _track_fetched(self, summary) -> None:
         for r in summary:
             src = r["source"]
-            if self._is_requeue(r):
+            if r["requeue"]:
                 continue  # stays pending under a Retry-After hold (ST8)
             if r["kind"] == "listing":
                 self._pending_listing_pages.get(src, set()).discard(r["page_key"])
@@ -1388,23 +1374,21 @@ class CrawlEngine:
         st = self.staged()
         if st is None:
             return None
-        valid = st.filter(F.col("is_valid"))
-        w = Window.partitionBy("offer_id_k").orderBy(F.desc("round"))
-        keyed = valid.withColumn(
-            "offer_id_k", F.coalesce(F.col("offer_id"), F.col("url_canon"))
-        )
-        seen = keyed.groupBy("offer_id_k").agg(
-            F.min("round").alias("first_seen_round"),
-            F.max("round").alias("last_seen_round"),
-        )
-        latest = (
-            keyed.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        # one window pass; every valid row has an offer_id (refine's gate)
+        w = Window.partitionBy("offer_id").orderBy(F.desc("round"))
+        every_round = w.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
         )
         return (
-            latest.join(seen, "offer_id_k")
-            .select(*OFFER_COLUMNS, "first_seen_round", "last_seen_round")
+            st.filter(F.col("is_valid"))
+            .select(
+                *OFFER_COLUMNS,
+                F.min("round").over(every_round).alias("first_seen_round"),
+                F.max("round").over(every_round).alias("last_seen_round"),
+                F.row_number().over(w).alias("_rn"),
+            )
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
         )
 
     def offers_wide(self) -> DataFrame | None:

@@ -15,6 +15,8 @@ Settings chosen for the 100 TB design point (SURVEY.md §4):
 from __future__ import annotations
 
 import os
+import re
+import time
 
 from pyspark.sql import SparkSession
 
@@ -76,7 +78,7 @@ def get_spark(
         for k, v in engine_defaults.items():
             if not submitted.contains(k):
                 spark.conf.set(k, v)
-        return spark
+        return _await_executors(spark)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -88,7 +90,21 @@ def get_spark(
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return _await_executors(builder.getOrCreate())
+
+
+def _await_executors(spark: SparkSession) -> SparkSession:
+    """local-cluster[n,c,mem] registers its n executors asynchronously and
+    the engine sizes its exchanges off them: wait up to 120 s for all n.
+    Counts executors, as ``defaultParallelism`` never reads below 2."""
+    sc = spark.sparkContext
+    m = re.match(r"local-cluster\[(\d+),", sc.master)
+    deadline = time.monotonic() + 120
+    while m and sc._jsc.sc().getExecutorIds().size() < int(m.group(1)):
+        if time.monotonic() > deadline:
+            raise RuntimeError(f"executors never registered in 120 s: {sc.master}")
+        time.sleep(0.5)
+    return spark
 
 
 def fan_out(df, *key_cols: str, path: str | None = None):

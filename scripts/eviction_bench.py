@@ -19,9 +19,8 @@ Two eviction shapes expose the crossover:
   of the store and closes most of the gap.
 
 The r5 wholesale rebuild (re-key the ENTIRE store regardless of shape) is
-timed alongside for reference. Appends a section to BENCH/BASELINE.md.
-Run AFTER scripts/depth_bench.py — that script truncates everything below
-its own marker.
+timed alongside for reference. Rewrites its own section of
+BENCH/BASELINE.md and leaves every other section as it is.
 """
 
 from __future__ import annotations
@@ -36,7 +35,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from depth_bench import replace_own_section  # noqa: E402
+from scaling_bench import replace_own_section  # noqa: E402
 
 MARKER = "## Eviction at volume"
 N_ROWS = 1_000_000

@@ -22,9 +22,7 @@ from __future__ import annotations
 
 import argparse
 import json
-import re
 import sys
-import time
 from pathlib import Path
 
 # When shipped via --py-files the package is on the PYTHONPATH already; when
@@ -60,23 +58,9 @@ def main() -> None:
         seed_urls,
     )
 
+    # on local-cluster[n,c,mem] get_spark returns once all n executors have
+    # registered, before the engine sizes its exchanges off them
     spark = get_spark(app_name="crawl")
-    sc = spark.sparkContext
-    # local-cluster[n,c,mem]: wait for executor registration before the
-    # engine ctor sizes its exchanges off defaultParallelism (the target
-    # core count is knowable exactly). On dynamic masters (YARN/k8s) the
-    # first job blocks on executors anyway, so no wait is needed.
-    m = re.match(r"local-cluster\[(\d+),(\d+),\d+\]", sc.master)
-    if m:
-        want = int(m.group(1)) * int(m.group(2))
-        deadline = time.monotonic() + 120
-        while sc.defaultParallelism < want and time.monotonic() < deadline:
-            time.sleep(0.5)
-        if sc.defaultParallelism < want:
-            raise RuntimeError(
-                f"executors never registered: {sc.defaultParallelism}"
-                f"/{want} cores after 120 s"
-            )
     offers = make_offers(seed=42, n_pages=args.pages, cards_per_page=args.cards)
     graph = make_site_graph(offers, n_pages=args.pages)
     rules = {

@@ -54,7 +54,7 @@ def test_local_order_is_compute_once(spark, tmp_path):
 
 _PROBE = textwrap.dedent(
     """
-    import sys, tempfile, time
+    import sys, tempfile
     sys.path.insert(0, {repo!r})
     from realestate_scraper_spark.session import get_spark
     from realestate_scraper_spark.crawl.engine import CrawlEngine
@@ -67,10 +67,7 @@ _PROBE = textwrap.dedent(
         shuffle_partitions=4,
         extra_conf={{"spark.executorEnv.PYTHONPATH": {repo!r}}},
     )
-    sc = spark.sparkContext
-    deadline = time.monotonic() + 120
-    while sc.defaultParallelism < 4 and time.monotonic() < deadline:
-        time.sleep(0.5)
+    sc = spark.sparkContext  # get_spark waited for both executors
     assert sc.defaultParallelism == 4, sc.defaultParallelism
     offers = make_offers(seed=42, n_pages=3, cards_per_page=8)
     graph = make_site_graph(offers, n_pages=3, page_weight_kb=8)

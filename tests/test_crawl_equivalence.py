@@ -484,8 +484,9 @@ def test_every_crawl_job_is_phase_tagged(engine_run):
     legs — accounts its wall under a named phase, including jobs submitted
     from pool worker threads (where the main thread's thread-local
     ``spark.job.description`` is invisible; engine._tagged re-tags them).
-    Event-log attribution (scripts/evlog_phases.py) relies on exactly this
-    map; the r5/r6 inverse-scaling root causes were found through it."""
+    The per-phase tables of scripts/scaling_bench.py group the status
+    store's jobs by exactly this tag; the r5/r6 inverse-scaling root causes
+    were found through it."""
     eng, _ = engine_run
     got = set(eng.phase_times)
     required = {

@@ -38,6 +38,20 @@ def test_refresh_updates_not_duplicates(spark, tmp_path):
     assert staged_valid >= 2 * len(second)
 
 
+def test_offers_view_is_one_window_pass(spark, tmp_path):
+    """offers() takes the latest row and the first/last round of each offer
+    in one window over the staged rows: no aggregate, no self-join."""
+    _, _, graph = build_corpus(seed=42, n_pages=1, cards_per_page=4)
+    eng = CrawlEngine(spark, str(tmp_path / "window"), graph, n_salts=2)
+    eng.seed(seed_urls())
+    eng.run(max_rounds=3)
+    offers = eng.offers()
+    assert offers.collect()
+    plan = offers._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in plan, plan
+    assert "Join" not in plan and "HashAggregate" not in plan, plan
+
+
 def test_domain_salting_spreads_shards(spark, tmp_path):
     _, _, graph = build_corpus(seed=42, n_pages=3, cards_per_page=8)
     eng = CrawlEngine(spark, str(tmp_path / "salt"), graph, n_salts=4)

@@ -7,7 +7,9 @@ after its own marker (truncate-at-marker + append). These tests pin:
    sections before AND after the marker survive a re-render;
 2. the shipped report actually contains the sections its prose references
    (the "Multi-JVM evidence" / "Cluster launch shape" sections the r6
-   truncation ate, restored in r7).
+   truncation ate, restored in r7);
+3. the status-store reading behind the scaling report's per-phase tables
+   counts a phase's jobs under its tag and the rest as "(untagged)".
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO / "scripts"))
 
-from depth_bench import MARKER, replace_own_section  # noqa: E402
+from scaling_bench import MARKER, replace_own_section  # noqa: E402
 
 
 def test_replace_preserves_unrelated_sections():
@@ -77,22 +79,6 @@ def test_replace_with_non_default_marker():
     assert out.index("depth body") < out.index("NEW") < out.index("## After")
 
 
-def test_scaling_bench_keeps_later_sections_by_heading_only():
-    """scaling_bench keeps every section another bench appended after its
-    own; a prose mention of such a heading inside its own section is not
-    where the kept tail starts."""
-    from scaling_bench import later_sections
-
-    text = (
-        "# T\n\n## Scaling\n\nOLD, see `## Long-horizon soak` below.\n\n"
-        "## Eviction at volume\n\nevict\n\n## Long-horizon soak\n\nsoak\n"
-    )
-    assert later_sections(text) == (
-        "## Eviction at volume\n\nevict\n\n## Long-horizon soak\n\nsoak\n"
-    )
-    assert later_sections("# T\n\n## Scaling\n\nbody\n") == ""
-
-
 def test_replace_appends_when_absent():
     text = "# T\n\n## Keep\n\nx\n"
     out = replace_own_section(text, [MARKER, "", "NEW"])
@@ -107,6 +93,32 @@ def test_shipped_report_has_all_referenced_sections():
     for required in (
         "Multi-JVM evidence: separate executor processes",
         "Cluster launch shape: spark-submit --py-files",
+        "Round-loop amortization at depth",
         MARKER[3:],
     ):
         assert required in headings, f"missing section: {required}"
+
+
+def test_phase_rows_count_tagged_and_untagged_jobs(spark):
+    from scaling_bench import job_ids, phase_rows
+
+    sc = spark.sparkContext
+
+    def one_job() -> None:
+        spark.range(8, numPartitions=2).write.format("noop").mode(
+            "overwrite"
+        ).save()
+
+    skip = job_ids(sc)
+    sc.setLocalProperty("spark.job.description", "probe_phase")
+    try:
+        one_job()
+        one_job()
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    one_job()
+    rows = phase_rows(sc, skip)
+    assert rows["probe_phase"]["jobs"] == 2, rows
+    assert rows["(untagged)"]["jobs"] == 1, rows
+    for row in rows.values():
+        assert row["tasks"] > 0 and row["cpu_s"] >= 0, rows
