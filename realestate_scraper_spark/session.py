@@ -8,8 +8,13 @@ Settings chosen for the 100 TB design point (SURVEY.md §4):
   per-row Python UDFs are banned in this codebase.
 - ``maxRecordsPerBatch`` bounded so ~100 KB binary image payloads cannot blow
   executor memory inside an Arrow batch (SURVEY.md §7.5 item 5).
-- shuffle partitions default to a multiple of local cores; on a real cluster
-  this is set per-job (2-3× total cores) and AQE coalesces down.
+- shuffle partitions default to a fixed 32 unless the caller passes
+  ``shuffle_partitions``; on a real cluster this is set per-job (2-3× total
+  cores) and AQE coalesces down.
+- the codegen class cache holds 1,000 compiled classes, not Spark's 100: the
+  engine re-runs the same plans in one long-lived session, and one crawl or
+  query pass alone has more than 100 distinct generated units, so at the
+  default LRU evicts each class before its reuse.
 """
 
 from __future__ import annotations
@@ -18,11 +23,18 @@ import os
 import re
 import time
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # Arrow batches carry `bytes` image blobs; 512 rows × ~100 KB ≈ 50 MB/batch,
 # comfortably inside a 4 GB executor even with a few batches in flight.
 ARROW_MAX_RECORDS_PER_BATCH = 512
+
+# Static (JVM-global) conf: it must be on the builder, before the JVM starts.
+# The cap only bounds the cache; memory grows with the classes actually used
+# (measured on local[4]: about 146 for the 14 headline queries, about 172
+# for the bench crawl and its warm-up crawl).
+STATIC_DEFAULTS = {"spark.sql.codegen.cache.maxEntries": "1000"}
 
 
 def get_spark(
@@ -42,11 +54,13 @@ def get_spark(
       rule: ``spark-submit --py-files engine.zip scripts/run_crawl.py``):
       the JVM gateway already exists (``PYSPARK_GATEWAY_PORT`` is exported
       by PythonRunner) and ``--master`` / ``--conf`` / ``--driver-memory``
-      belong to the operator. The builder then sets NOTHING that would
-      shadow the submitted conf; engine defaults are applied *after*
-      ``getOrCreate`` via ``spark.conf.set`` only for runtime-settable keys
-      the operator did not explicitly submit (``sc.getConf.contains`` is
-      true only for explicit settings, never Spark's own defaults).
+      belong to the operator. The builder then sets nothing that would
+      shadow the submitted conf: a static default goes on the builder only
+      when ``SparkConf().contains`` (the system properties spark-submit
+      sets) says it was not submitted, and the runtime defaults are applied
+      *after* ``getOrCreate`` via ``spark.conf.set``, again only for keys
+      the operator did not submit (``contains`` is true only for explicit
+      settings, never Spark's own defaults).
     """
     submit_owned = master is None and "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not submit_owned:
@@ -71,6 +85,13 @@ def get_spark(
 
     if submit_owned:
         builder = SparkSession.builder.appName(app_name)
+        # connect to the gateway first: without a JVM, SparkConf() is an
+        # empty Python-side dict that never sees the submitted conf
+        SparkContext._ensure_initialized()
+        submitted = SparkConf()
+        for k, v in STATIC_DEFAULTS.items():
+            if not submitted.contains(k):
+                builder = builder.config(k, v)
         for k, v in (extra_conf or {}).items():
             builder = builder.config(k, v)
         spark = builder.getOrCreate()
@@ -86,7 +107,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    for k, v in engine_defaults.items():
+    for k, v in {**STATIC_DEFAULTS, **engine_defaults}.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,6 +1,8 @@
 """Profile every registry query at the driver's correctness SF (sf0.01).
 
-Mimics the driver: one SparkSession, run each queries() entry, collect, time.
+Mimics the driver: one SparkSession with the engine's defaults
+(``session.get_spark`` on local[nproc], nproc shuffle partitions), run each
+queries() entry, collect, time.
 Prints a sorted per-query wall table + total so the registry can be budgeted
 to fit the driver's per-run time limit (the r3 failure mode: board stopped
 after q51).
@@ -11,6 +13,7 @@ Usage: python scripts/profile_registry.py [sf_dir] [only_prefix...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -23,15 +26,13 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:]
 
-    from pyspark.sql import SparkSession
+    from realestate_scraper_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .appName("profile_registry")
-        .getOrCreate()
+    nproc = os.cpu_count() or 1
+    spark = get_spark(
+        app_name="profile_registry",
+        master=f"local[{nproc}]",
+        shuffle_partitions=nproc,
     )
     spark.sparkContext.setLogLevel("ERROR")
 

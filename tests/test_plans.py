@@ -107,13 +107,15 @@ def test_refine_is_pure_expressions(spark):
 
 
 def test_ref_lit_codegen_source_is_value_invariant(spark):
-    """Two plans differing only in a ref_lit constant must share ONE
-    generated class (compile-cache hit): the crawl loop rebuilds its write
-    projections every round with a fresh round stamp, and an inlined
-    primitive literal forces a Janino recompile per round per stage —
-    measured in the r6 depth probe as 1-5 s of core-invariant wall each in
-    the staged/insert/update stages (one task compiling at full CPU, all
-    others blocked on the code cache)."""
+    """Two plans differing only in a ref_lit constant must generate ONE
+    source text: the crawl loop rebuilds its write projections every round
+    with a fresh round stamp, and an inlined primitive literal makes a new
+    source, so a Janino compile per round per stage — measured in the r6
+    depth probe as 1-5 s of core-invariant wall each in the
+    staged/insert/update stages (one task compiling at full CPU, all others
+    blocked on the code cache). Equal source turns into a cache hit only
+    while the codegen cache holds the session's working set (sized in
+    session.get_spark; test_repeat_pass_reuses_generated_code)."""
     from realestate_scraper_spark.functions.codegen import ref_lit
 
     base = spark.range(8)
@@ -138,3 +140,26 @@ def test_ref_lit_codegen_source_is_value_invariant(spark):
     # the wrapper must not force an interpreted fallback: the projection
     # stays inside a WholeStageCodegen span ('*(n)' prefix)
     assert "*(" in da._jdf.queryExecution().executedPlan().toString()
+
+
+def test_repeat_pass_reuses_generated_code(spark, sf_dir):
+    """A repeat pass of the 14 headline queries compiles (almost) nothing:
+    the session's codegen cache holds every class of the warm-up pass. At
+    Spark's default of 100 entries LRU evicts each class before its reuse
+    and every pass compiles about 133 units (sf0.001, local[4])."""
+    from bench import HEADLINE
+    from realestate_scraper_spark.plans import relational, trainingdata
+
+    registry = {**relational.REGISTRY, **trainingdata.REGISTRY}
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def one_pass():
+        for name in HEADLINE:
+            registry[name][0](spark, sf_dir).write.format("noop").mode(
+                "overwrite").save()
+
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() - before <= 5

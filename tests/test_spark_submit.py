@@ -38,6 +38,14 @@ def _zip_package(dest: Path) -> Path:
     return zip_path
 
 
+def _submit_env() -> dict:
+    """No PYTHONPATH: the engine is importable only from --py-files."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    return env
+
+
 def test_spark_submit_py_files_local_cluster(tmp_path):
     zip_path = _zip_package(tmp_path)
     # The entry script leaves the repo so its own sys.path bootstrap cannot
@@ -45,9 +53,7 @@ def test_spark_submit_py_files_local_cluster(tmp_path):
     script = tmp_path / "run_crawl.py"
     shutil.copy(REPO / "scripts" / "run_crawl.py", script)
 
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["PYSPARK_PYTHON"] = sys.executable
-    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    env = _submit_env()
 
     out = subprocess.run(
         [
@@ -79,3 +85,44 @@ def test_spark_submit_py_files_local_cluster(tmp_path):
     assert summary["pages_fetched"] == 125, summary
     assert summary["offers_rows"] == 79, summary
     assert summary["rounds"] > 0, summary
+
+
+_CONF_PROBE = """
+import json
+from realestate_scraper_spark.session import get_spark
+spark = get_spark()
+keys = ["spark.sql.codegen.cache.maxEntries", "spark.sql.session.timeZone"]
+print(json.dumps({k: spark.conf.get(k) for k in keys}))
+spark.stop()
+"""
+
+
+def test_spark_submit_static_default_yields_to_submitted_conf(tmp_path):
+    """The codegen cache size is a static conf, so the spark-submit-owned
+    path sets it on the builder: applied when the operator did not submit
+    it, never over a submitted ``--conf``."""
+    zip_path = _zip_package(tmp_path)
+    script = tmp_path / "conf_probe.py"
+    script.write_text(_CONF_PROBE)
+    env = _submit_env()
+
+    def submitted(*conf: str) -> dict:
+        args = [a for kv in conf for a in ("--conf", kv)]
+        out = subprocess.run(
+            [str(SPARK_SUBMIT), "--master", "local[1]",
+             "--conf", "spark.ui.enabled=false", *args,
+             "--py-files", str(zip_path), str(script)],
+            capture_output=True, text=True, timeout=240, env=env,
+            cwd=str(tmp_path),
+        )
+        assert out.returncode == 0, out.stderr[-3000:]
+        return json.loads(
+            [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
+        )
+
+    assert submitted() == {
+        "spark.sql.codegen.cache.maxEntries": "1000",
+        "spark.sql.session.timeZone": "UTC",
+    }
+    assert submitted("spark.sql.codegen.cache.maxEntries=7")[
+        "spark.sql.codegen.cache.maxEntries"] == "7"
