@@ -62,6 +62,12 @@ delta) overlap on one round pool over warm blocks and never recompute the
 Python stage; all of them are joined before ``checkpoint.json`` is written,
 so a checkpointed round never names offers that are not yet on disk.
 
+Finalize runs the way the rounds do: AQE stays off for all of ``run()``, and
+the five finalize writes (metrics, frontier compaction, curated offers,
+photos and quarantine) share one pool, each under its own phase tag, so
+every Spark job of a crawl carries a tag. Every table read takes its schema
+from the table's manifest (sources/tables.py), so no job infers one.
+
 The driver-side loop is the one intentionally imperative piece (the crawl is
 inherently iterative — same as the reference's `while True` pagination,
 otodom.py:484-617); every step inside a round is a declarative DataFrame op.
@@ -191,7 +197,7 @@ class CrawlEngine:
         # raw zone: one staged append per round (refined parse output,
         # partitioned by validity so counts come from parquet footers);
         # curated offers/photos/quarantine are views over it, durably
-        # materialized once per run in finalize_curated().
+        # materialized once per run by _finalize().
         self.t_staged = ParquetTable(run_dir, "staged")
         self.t_offers = ParquetTable(run_dir, "offers")
         self.t_photos = ParquetTable(run_dir, "photos")
@@ -348,14 +354,10 @@ class CrawlEngine:
                 self._track_new_agg(self._new_rows_agg(df))
             w_fut.result()
             s_fut.result()
-        # lazy, schema-pinned re-read: the durable snapshot (not the driver
-        # literal) roots the working set, so it stays recomputable from disk
-        snap = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-            self.t_frontier.snapshot_paths()[0]
-        )
-        # snap is a disk-rooted scan already — checkpointing it would only
-        # add one more tiny job; the working set stays lazily recomputable
-        self._pending = snap
+        # the durable snapshot (not the driver literal) roots the working
+        # set, so it stays lazily recomputable from disk; a disk-rooted scan
+        # needs no checkpoint job
+        self._pending = self.t_frontier.read(self.spark)
         self._write_checkpoint()
 
     def _bootstrap_robots(self, seeds: list[tuple[str, str]]) -> None:
@@ -442,18 +444,17 @@ class CrawlEngine:
     # ---------------------------------------------------------- round loop
     def run(self, max_rounds: int = 1000) -> dict:
         stats = {"rounds": 0, "pages_fetched": 0, "offers_parsed": 0}
-        # AQE OFF for the round loop (restored for finalize): every in-round
-        # exchange is explicitly sized or alignment-pinned — the politeness
-        # repartition is count-pinned, the insert exchange is pinned to the
-        # seen store's bucket count (an alignment AQE must not change), the
-        # appends are explicit repartitions, and skew is handled by domain
-        # salting — so adaptive re-planning has nothing to decide here, but
-        # it materializes every query stage as its OWN job with a driver
-        # re-plan between (the r7 event logs read 3-4 jobs per in-round
-        # write). Measured on the bench crawl: 18.1 → 15.8 s. Finalize keeps
-        # AQE: its reconciliation windows/joins are the one in-engine place
-        # where runtime re-planning (skew split, partition coalescing) can
-        # matter at scale.
+        # AQE OFF for all of run(), rounds and finalize: every exchange is
+        # explicitly sized or alignment-pinned — the politeness repartition
+        # is count-pinned, the insert exchange is pinned to the seen store's
+        # bucket count (an alignment AQE must not change), the appends are
+        # explicit repartitions, and skew is handled by domain salting — so
+        # adaptive re-planning has nothing to decide, but it materializes
+        # every query stage as its OWN job with a driver re-plan between
+        # (the r7 event logs read 3-4 jobs per in-round write), submitted
+        # from AQE's own futures, which carry no phase tag. Measured on the
+        # bench crawl: 18.1 → 15.8 s for the loop; with finalize too, 55 →
+        # 31 jobs per crawl, none untagged.
         conf = self.spark.conf
         prev_aqe = conf.get("spark.sql.adaptive.enabled")
         conf.set("spark.sql.adaptive.enabled", "false")
@@ -470,27 +471,40 @@ class CrawlEngine:
                         self._stopped.setdefault(src, "offer_limit")
                     self._write_checkpoint()
                     break
+            with self._phase("run_finalize"):
+                self._finalize()
         finally:
             conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        with self._phase("run_finalize"):
-            # the three finalize jobs touch DISJOINT tables (t_metrics /
-            # t_frontier / curated-from-staged) — same overlap rationale as
-            # the in-round output jobs: the driver submits all three and the
-            # executor pool schedules them together. Each is re-tagged on
-            # its OWN pool thread (_phase is thread-local — the tag set on
-            # the main thread does not reach jobs submitted from a worker).
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                futs = [
-                    pool.submit(self._tagged, "finalize_metrics",
-                                self._flush_metrics),
-                    pool.submit(self._tagged, "finalize_compact",
-                                self._compact_frontier),
-                    pool.submit(self._tagged, "finalize_curated",
-                                self.finalize_curated),
-                ]
-                for f in futs:
-                    f.result()
         return stats
+
+    def _finalize(self) -> None:
+        """The run's five writes, to DISJOINT tables — metrics, the
+        compacted frontier, and the curated offers/photos/quarantine views
+        of the raw staged zone (the reference's batched flush, O4, at run
+        granularity) — submitted to one pool, so the executor pool schedules
+        them together (the in-round output jobs' overlap rationale). Each is
+        tagged on its OWN pool thread: _phase is thread-local, so the tag
+        set on the main thread does not reach jobs submitted from a
+        worker."""
+        legs = [
+            ("finalize_metrics", self._flush_metrics),
+            ("finalize_compact", self._compact_frontier),
+            ("finalize_offers", self._write_curated, self.t_offers, self.offers),
+            ("finalize_photos", self._write_curated, self.t_photos, self.photos),
+            ("finalize_quarantine", self._write_curated, self.t_quarantine,
+             self.quarantine),
+        ]
+        with ThreadPoolExecutor(max_workers=len(legs)) as pool:
+            futs = [pool.submit(self._tagged, *leg) for leg in legs]
+            for f in futs:
+                f.result()
+
+    def _write_curated(self, table: ParquetTable, view) -> None:
+        df = view()
+        if df is not None:
+            table.overwrite(
+                self._coalesced(df), round_idx=self.round_idx, stage="curated"
+            )
 
     def _flush_metrics(self) -> None:
         if not self._metrics_buf:
@@ -516,10 +530,8 @@ class CrawlEngine:
             )
             # the lazy working set referenced the just-deleted delta files —
             # rebase it onto the compacted snapshot (disk-backed, no job)
-            self._pending = (
-                self.spark.read.parquet(self.t_frontier.snapshot_paths()[-1])
-                .filter(F.col("status") == STATUS_PENDING)
-                .select(*FRONTIER_COLS)
+            self._pending = self.t_frontier.read(self.spark).filter(
+                F.col("status") == STATUS_PENDING
             )
             self._rounds_since_cut = 0
 
@@ -531,30 +543,9 @@ class CrawlEngine:
         re-enqueued (they can only re-fail / re-miss).
         Written as an O(failed) update delta; returns the re-enqueued count.
         """
-        fr = self.frontier()
-        if fr is None:
-            return 0
-        reset = (
-            fr.filter(F.col("status") == STATUS_FAILED)
-            .withColumn("attempts", F.col("attempts") + 1)
-            .withColumn("status", F.lit(STATUS_PENDING))
-            .withColumn("round", F.lit(self.round_idx))
-            .withColumn("retry_at", F.lit(None).cast("double"))
-        )
-        n, path = self.t_frontier.append_with_path(
-            self._coalesced(reset.select(*FRONTIER_COLS)),
-            round_idx=self.round_idx,
-            stage="retry_reset",
-        )
+        n = self._requeue(F.col("status") == STATUS_FAILED, "retry_reset")
         if n == 0:
             return 0
-        requeued = self.spark.read.parquet(path)
-        self._track_new_agg(self._new_rows_agg(requeued))
-        self._pending = (
-            requeued
-            if self._pending is None
-            else self._pending.unionByName(requeued)
-        ).localCheckpoint()
         # failed sources get another chance at their stop state
         self._stopped = {
             k: v for k, v in self._stopped.items() if v in ("no_new", "offer_limit")
@@ -656,36 +647,45 @@ class CrawlEngine:
         repeated `detail` runs over an existing urls.csv re-parse every URL;
         first_seen/last_seen split on the merge, detail.py:83,89-90).
         attempts bumps so flaky pages don't re-fail. O(done-offers) delta."""
-        fr = self.frontier()
-        if fr is None:
-            return 0
-        reset = (
-            fr.filter(
-                (F.col("status") == STATUS_DONE) & (F.col("kind") == "offer")
-            )
-            .withColumn("attempts", F.col("attempts") + 1)
-            .withColumn("status", F.lit(STATUS_PENDING))
-            .withColumn("round", F.lit(self.round_idx))
-            .withColumn("retry_at", F.lit(None).cast("double"))
-        )
-        n, path = self.t_frontier.append_with_path(
-            self._coalesced(reset.select(*FRONTIER_COLS)),
-            round_idx=self.round_idx,
-            stage="refresh_reset",
+        n = self._requeue(
+            (F.col("status") == STATUS_DONE) & (F.col("kind") == "offer"),
+            "refresh_reset",
         )
         if n == 0:
             return 0
-        requeued = self.spark.read.parquet(path)
+        self._stopped = {
+            k: v for k, v in self._stopped.items() if v == "offer_limit"
+        }
+        self._no_new_streak.clear()
+        return n
+
+    def _requeue(self, which, stage: str) -> int:
+        """Re-enqueue the reconciled frontier rows matching ``which`` as
+        PENDING with attempts+1: one O(matched) update delta, read back into
+        the driver counters and the working set. Returns the row count."""
+        fr = self.frontier()
+        if fr is None:
+            return 0
+        reset = fr.filter(which).withColumns({
+            "attempts": F.col("attempts") + 1,
+            "status": F.lit(STATUS_PENDING),
+            "round": F.lit(self.round_idx),
+            "retry_at": F.lit(None).cast("double"),
+        })
+        n, path = self.t_frontier.append_with_path(
+            self._coalesced(reset.select(*FRONTIER_COLS)),
+            round_idx=self.round_idx,
+            stage=stage,
+        )
+        if n == 0:
+            return 0
+        requeued = self.t_frontier.read_snapshot(self.spark, path)
         self._track_new_agg(self._new_rows_agg(requeued))
         self._pending = (
             requeued
             if self._pending is None
             else self._pending.unionByName(requeued)
         ).localCheckpoint()
-        self._stopped = {
-            k: v for k, v in self._stopped.items() if v == "offer_limit"
-        }
-        self._no_new_streak.clear()
         return n
 
     def _coalesced(self, df: DataFrame) -> DataFrame:
@@ -908,10 +908,8 @@ class CrawlEngine:
             ins_fut = pool.submit(_ins)
             upd_fut = pool.submit(_upd)
             ins_n, ins_path = ins_fut.result()
-            # explicit schema: the snapshot was written from FRONTIER_COLS
-            # this round — inferring it back would re-read footers per round
             new_df = (
-                self.spark.read.schema(FRONTIER_SCHEMA).parquet(ins_path)
+                self.t_frontier.read_snapshot(self.spark, ins_path)
                 if ins_n
                 else None
             )
@@ -941,12 +939,10 @@ class CrawlEngine:
         # it would add a dead parquet scan to the working-set plan per round
         requeue_n = sum(r["n"] for r in summary if r["requeue"])
         if upd_n and requeue_n:
-            requeues = (
-                self.spark.read.schema(FRONTIER_SCHEMA)
-                .parquet(upd_path)
-                .filter(F.col("status") == STATUS_PENDING)
+            requeues = self.t_frontier.read_snapshot(self.spark, upd_path)
+            nxt = nxt.unionByName(
+                requeues.filter(F.col("status") == STATUS_PENDING)
             )
-            nxt = nxt.unionByName(requeues.select(*FRONTIER_COLS))
         if new_df is not None:
             nxt = nxt.unionByName(new_df.select(*FRONTIER_COLS))
         self._rounds_since_cut += 1
@@ -1036,13 +1032,12 @@ class CrawlEngine:
                 .withColumn("round", ref_lit(self.round_idx, "int"))
             )
         with self._phase("staged_append"):
-            self.t_staged.append(
+            _, snap_path = self.t_staged.append_with_path(
                 self._coalesced(staged),
                 round_idx=self.round_idx,
                 stage="staged",
                 partition_by=["is_valid"],
             )
-        snap_path = self.t_staged.lineage()[-1]["path"]
         return _rows_under(os.path.join(snap_path, "is_valid=true"))
 
     # ------------------------------------------------- round-loop helpers
@@ -1168,7 +1163,6 @@ class CrawlEngine:
                 continue  # retryable — stays not-done with fetch_fail (ST5)
             self._stopped.setdefault(src, "no_links")
         self._write_checkpoint()
-        self._flush_metrics()
 
     def _track_new_agg(self, agg_rows) -> None:
         for r in agg_rows:
@@ -1358,23 +1352,48 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- results
     def staged(self) -> DataFrame | None:
-        st = self.t_staged.read(self.spark)
-        if st is None:
-            return None
-        # is_valid is a directory partition column → inferred as string
-        return st.withColumn("is_valid", F.col("is_valid").cast("boolean"))
+        return self.t_staged.read(self.spark)
 
     def offers(self) -> DataFrame | None:
         """Curated offers view: latest parse wins per offer_id (idempotent
         MERGE semantics, ST6 — re-crawls update rather than duplicate),
         first_seen/last_seen carried as crawl rounds (F14 stamping, made
         deterministic by using logical time)."""
+        return self._latest_offers()
+
+    def offers_wide(self) -> DataFrame | None:
+        """The wide storage variant (scrapper/core/storage.py:13-20 plus the
+        validated-model breadth of validate.py:25-40): canonical 11 +
+        title/district/street/floor/floors/market_type/property_type +
+        year_built, posted_at/updated_at (F11/F12 cascade), the F28
+        ``features`` array, and first/last_seen (as crawl rounds) — same
+        latest-wins merge as offers()."""
+        return self._latest_offers(
+            F.col("raw_title").alias("title"),
+            F.col("raw_district").alias("district"),
+            F.col("raw_street").alias("street"),
+            F.col("raw_floor").alias("floor"),
+            F.col("raw_floors").alias("floors"),
+            F.col("raw_market").alias("market_type"),
+            F.col("raw_ptype").alias("property_type"),
+            "year_built",
+            "posted_at",
+            "updated_at",
+            "features",
+        )
+
+    def _latest_offers(self, *wide) -> DataFrame | None:
+        """Each valid offer's latest staged row (``OFFER_COLUMNS``, its
+        first/last seen round, then ``wide``) in ONE window pass: the
+        row_number that picks the latest row and the min/max over the same
+        partition share one sort, so every column comes from the same row
+        even when two parses of an offer tie on round."""
         from realestate_scraper_spark.schemas import OFFER_COLUMNS
 
         st = self.staged()
         if st is None:
             return None
-        # one window pass; every valid row has an offer_id (refine's gate)
+        # every valid row has an offer_id (refine's gate)
         w = Window.partitionBy("offer_id").orderBy(F.desc("round"))
         every_round = w.rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing
@@ -1385,44 +1404,12 @@ class CrawlEngine:
                 *OFFER_COLUMNS,
                 F.min("round").over(every_round).alias("first_seen_round"),
                 F.max("round").over(every_round).alias("last_seen_round"),
+                *wide,
                 F.row_number().over(w).alias("_rn"),
             )
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-
-    def offers_wide(self) -> DataFrame | None:
-        """The wide storage variant (scrapper/core/storage.py:13-20 plus the
-        validated-model breadth of validate.py:25-40): canonical 11 +
-        title/district/street/floor/floors/market_type/property_type +
-        year_built, posted_at/updated_at (F11/F12 cascade), the F28
-        ``features`` array, and first/last_seen (as crawl rounds) — same
-        latest-wins merge as offers()."""
-        base = self.offers()
-        if base is None:
-            return None
-        st = self.staged().filter(F.col("is_valid"))
-
-        w = Window.partitionBy("offer_id").orderBy(F.desc("round"))
-        wide = (
-            st.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "offer_id",
-                F.col("raw_title").alias("title"),
-                F.col("raw_district").alias("district"),
-                F.col("raw_street").alias("street"),
-                F.col("raw_floor").alias("floor"),
-                F.col("raw_floors").alias("floors"),
-                F.col("raw_market").alias("market_type"),
-                F.col("raw_ptype").alias("property_type"),
-                "year_built",
-                "posted_at",
-                "updated_at",
-                "features",
-            )
-        )
-        return base.join(wide, "offer_id")
 
     def photos(self) -> DataFrame | None:
         st = self.staged()
@@ -1451,33 +1438,3 @@ class CrawlEngine:
             .filter(F.col("_rn") == 1)
             .select(*FRONTIER_COLS)
         )
-
-    def finalize_curated(self) -> None:
-        """Materialize the curated offers/photos/quarantine tables from the
-        raw staged zone — one write each per run (the reference's batched
-        flush, O4, at run granularity). The three tables are independent
-        views over the same staged scan, so the writes run as concurrent
-        jobs (same overlap rationale as the in-round output jobs)."""
-        jobs = [
-            (table, df)
-            for table, df in (
-                (self.t_offers, self.offers()),
-                (self.t_photos, self.photos()),
-                (self.t_quarantine, self.quarantine()),
-            )
-            if df is not None
-        ]
-        if not jobs:
-            return
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            futs = [
-                pool.submit(
-                    table.overwrite,
-                    self._coalesced(df),
-                    round_idx=self.round_idx,
-                    stage="curated",
-                )
-                for table, df in jobs
-            ]
-            for f in futs:
-                f.result()

@@ -55,7 +55,7 @@ def seed_frontier(
         spark, rows,
         "url string, source string, kind string, page_idx int, slot int, sub_slot int",
     )
-    return _finish_frontier_rows(df, round_idx=0, n_salts=n_salts)
+    return finish_new_rows(with_url_keys(df, n_salts=n_salts), 0)
 
 
 def absolutize_href_expr(href, parent_url):
@@ -189,29 +189,6 @@ def classify_and_key_links(
         keyed.groupBy("url_canon")
         .agg(F.min(packed).alias("_first"))
         .select("url_canon", "_first.*")
-    )
-
-
-def _finish_frontier_rows(df: DataFrame, round_idx: int, n_salts: int) -> DataFrame:
-    keyed = with_url_keys(df, n_salts=n_salts)
-    return keyed.select(
-        "url",
-        "url_canon",
-        "url_hash32",
-        "url_hash64",
-        "source",
-        "domain",
-        "domain_salt",
-        "kind",
-        "page_idx",
-        "slot",
-        "sub_slot",
-        F.lit(None).cast("string").alias("offer_id"),
-        F.lit(STATUS_PENDING).alias("status"),
-        F.lit(round_idx).alias("round"),
-        priority_expr(F.col("page_idx"), F.col("kind")).alias("priority"),
-        F.lit(None).cast("double").alias("retry_at"),
-        F.lit(0).alias("attempts"),
     )
 
 

@@ -12,9 +12,8 @@ physics:
   candidate batch is shuffled, into n partitions that line up with the
   buckets. ``Bucketed: true`` + exactly one Exchange is asserted in
   tests/test_seen_store.py.
-- per-round inserts are O(new URLs) bucketed appends (``coalesce(1)`` → ≤ n
-  files per round at metadata scale; on a cluster the coalesce is dropped and
-  each append is task-parallel);
+- per-round inserts are O(new URLs) bucketed appends, each coalesced to one
+  task so a round writes ≤ n files;
 - every ``compact_every`` appends the store is rewritten to one file per
   bucket — **task-parallel, one task per bucket** (the rewrite repartitions
   on ``url_canon`` into exactly ``n_buckets`` partitions, which is the same
@@ -68,7 +67,6 @@ class BucketedSeenStore:
         *,
         n_buckets: int = 8,
         compact_every: int = 8,
-        coalesce_appends: bool = True,
     ):
         self.spark = spark
         self.dir = os.path.join(run_dir, "seen_bucketed")
@@ -82,7 +80,6 @@ class BucketedSeenStore:
         persisted = self._load_meta()
         self.n_buckets = persisted if persisted is not None else n_buckets
         self.compact_every = compact_every
-        self.coalesce_appends = coalesce_appends
         self._appends_since_compact = 0
 
     # ------------------------------------------------------------ lifecycle
@@ -146,13 +143,10 @@ class BucketedSeenStore:
     def append(self, df: DataFrame) -> None:
         """O(new URLs) bucketed append; periodic compaction keeps the file
         count O(compact_every × n_buckets)."""
-        out = df.select("url_canon")
-        if self.coalesce_appends:
-            # toy-scale appends are a few rows; one task → ≤ n_buckets files.
-            # On a cluster, drop the coalesce: appends stay task-parallel.
-            out = out.coalesce(1)
+        # one task → ≤ n_buckets files per append
         (
-            out.write.mode("append")
+            df.select("url_canon").coalesce(1)
+            .write.mode("append")
             .format("parquet")
             .bucketBy(self.n_buckets, "url_canon")
             .sortBy("url_canon")

@@ -2,8 +2,10 @@
 
 Settings chosen for the 100 TB design point (SURVEY.md §4):
 
-- AQE on (runtime re-plan, skew-join splitting) — the Otodom hot-domain skew
-  named in BASELINE.json is handled by domain-salting *plus* AQE skew joins.
+- AQE on (runtime re-plan, skew-join splitting) for the query registry. The
+  crawl engine switches it off inside ``CrawlEngine.run()``: every crawl
+  exchange is explicitly sized, and domain salting handles the Otodom
+  hot-domain skew named in BASELINE.json.
 - Arrow on — every Python-side stage is an Arrow-batched pandas UDF; raw
   per-row Python UDFs are banned in this codebase.
 - ``maxRecordsPerBatch`` bounded so ~100 KB binary image payloads cannot blow

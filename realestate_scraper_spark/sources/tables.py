@@ -11,6 +11,11 @@ same write discipline, toy-scale implementation —
 - the manifest records per-append lineage: round, stage, row count, snapshot
   id — the "per-partition lineage manifests" of the north_rule (file-level
   lineage; Iceberg would track per-data-file stats natively);
+- the manifest also records each snapshot's schema (``df.schema`` at write
+  time), as Iceberg table metadata does, and every read scans with it: no
+  Spark job infers a schema from footers, and a directory partition column
+  reads back with its written type (a boolean stays boolean). An entry
+  written before schemas were recorded is still read with inference;
 - reads list committed snapshot dirs only, so a crashed half-written append
   is invisible (snapshot isolation for a single writer).
 
@@ -26,10 +31,13 @@ import os
 import shutil
 import threading
 import uuid
+from functools import reduce
 
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _rows_from_footers(path: str) -> int:
@@ -43,6 +51,21 @@ def _rows_from_footers(path: str) -> int:
             if f.endswith(".parquet"):
                 total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
     return total
+
+
+def _entry(snap_id, path, rows, round_idx, stage, df: DataFrame) -> dict:
+    return {"id": snap_id, "path": path, "rows": rows, "round": round_idx,
+            "stage": stage, "schema": df.schema.json()}
+
+
+def _scan(spark: SparkSession, entry: dict) -> DataFrame:
+    """Scan one snapshot with its recorded schema (no inference job); an
+    entry written before the manifest recorded schemas infers it."""
+    reader = spark.read
+    if "schema" in entry:
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        reader = reader.schema(schema)
+    return reader.parquet(entry["path"])
 
 
 class ParquetTable:
@@ -111,15 +134,7 @@ class ParquetTable:
         rows = _rows_from_footers(path)
         with self._commit_lock:
             m = self._manifest()
-            m["snapshots"].append(
-                {
-                    "id": snap_id,
-                    "path": path,
-                    "rows": rows,
-                    "round": round_idx,
-                    "stage": stage,
-                }
-            )
+            m["snapshots"].append(_entry(snap_id, path, rows, round_idx, stage, df))
             self._commit(m)
         return rows, path
 
@@ -132,33 +147,30 @@ class ParquetTable:
         rows = _rows_from_footers(path)
         with self._commit_lock:
             self._commit(
-                {"snapshots": [{"id": snap_id, "path": path, "rows": rows,
-                                "round": round_idx, "stage": stage}]}
+                {"snapshots": [_entry(snap_id, path, rows, round_idx, stage, df)]}
             )
             self._snap_counter = 1
         for p in old:
             shutil.rmtree(p, ignore_errors=True)
         return rows
 
+    def _live(self) -> list[dict]:
+        # zero-row snapshots have no parquet files to scan — the manifest
+        # row count lets reads skip them
+        return [s for s in self._manifest()["snapshots"] if s["rows"] > 0]
+
     def read(self, spark: SparkSession) -> DataFrame | None:
-        # zero-row snapshots have no parquet files (schema inference would
-        # fail) — the manifest row count lets us skip them
-        paths = [
-            s["path"] for s in self._manifest()["snapshots"] if s["rows"] > 0
-        ]
-        if not paths:
-            return None
-        if len(paths) == 1:
-            return spark.read.parquet(paths[0])
-        # Snapshots may be individually partitioned (k=v subdirs); reading
-        # them as one multi-path scan trips partition discovery, so union
-        # per-snapshot scans (Iceberg reads via manifests and has no such
-        # issue).
-        dfs = [spark.read.parquet(p) for p in paths]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        """Union of the committed snapshots. Snapshots may be individually
+        partitioned (k=v subdirs); one multi-path scan would trip partition
+        discovery, so each snapshot is its own scan (Iceberg reads via
+        manifests and has no such issue)."""
+        dfs = [_scan(spark, s) for s in self._live()]
+        return reduce(DataFrame.unionByName, dfs) if dfs else None
+
+    def read_snapshot(self, spark: SparkSession, path: str) -> DataFrame:
+        """One committed snapshot (a path ``append_with_path`` returned)."""
+        entry = next(s for s in self._manifest()["snapshots"] if s["path"] == path)
+        return _scan(spark, entry)
 
     def read_versioned(self, spark: SparkSession) -> "DataFrame | None":
         """Union of committed snapshots with a ``_seq`` commit-order column.
@@ -168,23 +180,18 @@ class ParquetTable:
         transitions as O(batch) delta appends, resolve on read with a window
         over ``_seq``. Compaction (overwrite with the reconciled view) resets
         the history to one snapshot."""
-        from pyspark.sql import functions as F
-
-        snaps = [s for s in self._manifest()["snapshots"] if s["rows"] > 0]
-        if not snaps:
-            return None
-        out = None
-        for i, s in enumerate(snaps):
-            df = spark.read.parquet(s["path"]).withColumn("_seq", F.lit(i))
-            out = df if out is None else out.unionByName(df)
-        return out
+        dfs = [
+            _scan(spark, s).withColumn("_seq", F.lit(i))
+            for i, s in enumerate(self._live())
+        ]
+        return reduce(DataFrame.unionByName, dfs) if dfs else None
 
     def snapshot_paths(self, stages: set[str] | None = None) -> list[str]:
         """Data paths of committed snapshots, optionally filtered by stage."""
         return [
             s["path"]
-            for s in self._manifest()["snapshots"]
-            if s["rows"] > 0 and (stages is None or s["stage"] in stages)
+            for s in self._live()
+            if stages is None or s["stage"] in stages
         ]
 
     def lineage(self) -> list[dict]:

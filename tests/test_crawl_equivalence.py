@@ -5,12 +5,17 @@ equality of parsed offers vs the golden expectations.
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from realestate_scraper_spark.crawl.engine import CrawlEngine
 from realestate_scraper_spark.sources.synth import build_corpus, seed_urls
 from tests.reference_sim import simulate_reference_crawl
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
 N_PAGES = 4
 CARDS = 6
@@ -22,12 +27,24 @@ def corpus():
 
 
 @pytest.fixture(scope="module")
-def engine_run(spark, corpus, tmp_path_factory):
+def crawl_with_jobs(spark, corpus, tmp_path_factory):
+    """The module's crawl, plus its own Spark jobs per phase tag, read from
+    the status store right after run() (before later tests add jobs)."""
+    from scaling_bench import job_ids, phase_rows
+
     offers, images, graph = corpus
     run_dir = str(tmp_path_factory.mktemp("crawl_run"))
     eng = CrawlEngine(spark, run_dir, graph, n_salts=2)
+    sc = spark.sparkContext
+    before = job_ids(sc)
     eng.seed(seed_urls())
     stats = eng.run(max_rounds=20)
+    return eng, stats, phase_rows(sc, skip=before)
+
+
+@pytest.fixture(scope="module")
+def engine_run(crawl_with_jobs):
+    eng, stats, _ = crawl_with_jobs
     return eng, stats
 
 
@@ -478,24 +495,30 @@ def test_fused_stage_closure_stays_small(spark):
         bc.unpersist()
 
 
-def test_every_crawl_job_is_phase_tagged(engine_run):
-    """Observability contract: the full crawl lifecycle — seed's three
-    bootstrap jobs, every per-round output job, and the three finalize
-    legs — accounts its wall under a named phase, including jobs submitted
-    from pool worker threads (where the main thread's thread-local
-    ``spark.job.description`` is invisible; engine._tagged re-tags them).
-    The per-phase tables of scripts/scaling_bench.py group the status
-    store's jobs by exactly this tag; the r5/r6 inverse-scaling root causes
-    were found through it."""
-    eng, _ = engine_run
-    got = set(eng.phase_times)
+def test_every_crawl_job_is_phase_tagged(crawl_with_jobs):
+    """Observability contract: every Spark job of the crawl lifecycle —
+    seed's three bootstrap jobs, every per-round output job, and the five
+    finalize writes — carries a ``spark.job.description`` phase tag,
+    including jobs submitted from pool worker threads (where the main
+    thread's thread-local description is invisible; engine._tagged re-tags
+    them) and the query-stage jobs AQE would submit from its own futures
+    (run() keeps AQE off throughout). The per-phase tables of
+    scripts/scaling_bench.py group the status store's jobs by exactly this
+    tag; the r5/r6 inverse-scaling root causes were found through it."""
+    eng, _, jobs = crawl_with_jobs
+    untagged = jobs.get("(untagged)", {}).get("jobs", 0)
+    assert untagged == 0, f"{untagged} crawl jobs carry no phase tag: {jobs}"
+    finalize = sum(
+        row["jobs"] for tag, row in jobs.items() if tag.startswith("finalize_")
+    )
+    assert finalize <= 10, f"{finalize} finalize jobs: {jobs}"
     required = {
         "seed_snapshot", "seed_seen", "seed_bootstrap",
         "fetch_plan", "fetch_summary", "links_plan", "updates_plan",
         "insert_append", "update_append", "seen_append", "insert_deltas",
         "staged_plan", "staged_append", "staged_join",
         "run_finalize", "finalize_metrics", "finalize_compact",
-        "finalize_curated",
+        "finalize_offers", "finalize_photos", "finalize_quarantine",
     }
-    missing = required - got
-    assert not missing, f"untagged crawl phases: {sorted(missing)}"
+    missing = required - set(eng.phase_times)
+    assert not missing, f"untimed crawl phases: {sorted(missing)}"
