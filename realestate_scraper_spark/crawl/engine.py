@@ -4,7 +4,7 @@ One round =
   1. take the eligible PENDING working set (ALL known pending listing pages
      + all pending offer/investment pages; rows under a Retry-After hold are
      excluded until their round arrives),
-  2. politeness-governed fused fetch+parse (mapInPandas, partitioned by
+  2. politeness-governed fused fetch+parse (mapInArrow, partitioned by
      domain_salt), cached and materialized by the round's fetch summary,
   3. listings → link extraction → classify → canonicalize → exact anti-join
      dedupe against the seen store (O1) → new PENDING frontier rows,
@@ -97,7 +97,6 @@ from realestate_scraper_spark.functions.urlnorm import (
     url_hash64,
 )
 from realestate_scraper_spark.schemas import (
-    CHECKPOINT_SCHEMA,
     FRONTIER_SCHEMA,
     METRICS_SCHEMA,
     STATUS_DONE,
@@ -691,7 +690,7 @@ class CrawlEngine:
     def _coalesced(self, df: DataFrame) -> DataFrame:
         """Bound the file count of small per-round appends WITHOUT collapsing
         the compute stage above the write: ``coalesce`` propagates upstream
-        (the parse/refine mapInPandas would run at the coalesced width — the
+        (the fused fetch+parse would run at the coalesced width — the
         same failure mode as r2's AQE exchange collapse, self-inflicted),
         so this is a ``repartition`` exchange barrier. The shuffled rows are
         post-parse (no html payload), so the exchange is metadata-cheap;
@@ -1217,18 +1216,6 @@ class CrawlEngine:
         for src in sorted(self._sources):
             reason = self._stopped.get(src)
             drained = self._n_pending(src) == 0
-            if reason is None and drained and self._had_fetch_fail.get(src):
-                # drained only because pages failed → retryable, not done
-                # (ST5: fetch_fail regions stay not-done and re-enter)
-                state[src] = {
-                    "region": src,
-                    "done": False,
-                    "last_page_done": int(self._last_page_done.get(src, 0)),
-                    "stop_reason": "fetch_fail",
-                    "processed_offers_last_run": int(self._offers_total),
-                    "round": self.round_idx,
-                }
-                continue
             done = reason is not None or drained
             state[src] = {
                 "region": src,
@@ -1238,24 +1225,14 @@ class CrawlEngine:
                 "processed_offers_last_run": int(self._offers_total),
                 "round": self.round_idx,
             }
+            if reason is None and drained and self._had_fetch_fail.get(src):
+                # drained only because pages failed → retryable, not done
+                # (ST5: fetch_fail regions stay not-done and re-enter)
+                state[src].update(done=False, stop_reason="fetch_fail")
         tmp = self.checkpoint_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(state, f, indent=1)
         os.replace(tmp, self.checkpoint_path)
-
-    def checkpoint_df(self) -> DataFrame:
-        import json
-
-        with open(self.checkpoint_path) as f:
-            state = json.load(f)
-        rows = [
-            (
-                src, v["region"], v["done"], v["last_page_done"],
-                v["stop_reason"], v["processed_offers_last_run"], v["round"],
-            )
-            for src, v in sorted(state.items())
-        ]
-        return local_df(self.spark, rows, CHECKPOINT_SCHEMA)
 
     # ------------------------------------------------------- image pipeline
     def process_images(

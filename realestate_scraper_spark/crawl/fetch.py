@@ -1,4 +1,4 @@
-"""The fetch stage — S3/S4 (SURVEY.md §2.1) as a ``mapInPandas`` operator.
+"""The fetch stage — S3/S4 (SURVEY.md §2.1) as a ``mapInArrow`` operator.
 
 Replaces the reference's blocking, single-threaded HTTP client
 (scrapper/core/http.py:11-78: RateLimiter.wait() before every GET,
@@ -23,18 +23,24 @@ Retry-After honoring on 429/503) with a partition-parallel batch stage:
 - the clock is CONTINUOUS ACROSS ROUNDS (ST7): the engine seeds each round's
   buckets from the previous rounds' per-shard high-water marks
   (``start_offsets``), mirroring the reference's process-lifetime limiter
-  (core/http.py:13-21) — a round boundary never resets a domain's budget.
+  (core/http.py:13-21) — a round boundary never resets a domain's budget;
+- batches go in and out as Arrow: input columns are read as Python lists
+  (``to_pydict()``) and the output is built from plain Python lists against
+  one Arrow schema, so no pandas conversion runs on the crawl's Python path.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 import time
 from collections.abc import Iterator
-import pandas as pd
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 # O9 alternate listing-URL spelling (morizon.py:631-635): the portal's
 # primary template `morizon.pl/{category}/…` sometimes serves an empty shell;
@@ -105,7 +111,7 @@ def _make_fetch_core(
     # The broadcast HANDLES are captured; ``.value`` is dereferenced lazily
     # on first row, executor-side. Dereferencing on the driver (the old
     # shape) captured the materialized page store in the closure, so every
-    # round's mapInPandas cloudpickled the whole corpus into the task
+    # round's fused stage cloudpickled the whole corpus into the task
     # binary — measured as ~2 s/round of core-count-invariant driver time
     # at the fat depth-bench cells (fetch_plan phase), plus a per-worker
     # re-unpickle on the executor side. With the handle, the task binary is
@@ -240,6 +246,15 @@ _META_COLS = (
     "url", "url_canon", "url_hash64", "source", "domain", "domain_salt",
     "kind", "page_idx", "slot", "sub_slot", "attempts",
 )
+# the parent fields a link row carries; every other page field is null there
+_LINK_PARENT_COLS = ("url", "source", "kind", "page_idx", "slot")
+
+
+@functools.cache
+def _fused_arrow_schema() -> pa.Schema:
+    """``FUSED_FIELDS`` as an Arrow schema. Parsing DDL needs the JVM, so
+    this runs on the driver and the stage captures the result."""
+    return to_arrow_schema(DataType.fromDDL(FUSED_FIELDS))
 
 
 def make_fetch_parse_stage(
@@ -275,106 +290,62 @@ def make_fetch_parse_stage(
         robots_rules_bc=robots_rules_bc, start_offsets=start_offsets,
         t0_wall=t0_wall,
     )
+    schema = _fused_arrow_schema()
 
-    def fused_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fused_batches(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
         # one tick per PARTITION COMPUTE: a partition served from cache never
         # re-enters this generator, so the accumulator reads n_partitions iff
         # the round's consumers shared one compute (the multi-executor
         # duplicate-compute probe — see tests/test_cache_race.py)
         if computes_acc is not None:
             computes_acc.add(1)
-        for pdf in batches:
-            # Page rows and link rows buffer SEPARATELY: a link row only
-            # needs the seven fields the frontier path reads (parent url /
-            # source / kind / page_idx / slot + dom_idx + href) — the other
-            # meta strings (url_canon, domain, domain_salt, …) and all 21
-            # raw parse columns are dead weight that at high card counts
-            # dominated both the per-link Python appends and the Arrow
-            # transfer back to the JVM. They're bulk-filled with nulls once
-            # per batch instead of per link.
-            meta: dict[str, list] = {c: [] for c in _META_COLS}
-            st, at_ms = [], []
-            raw: dict[str, list] = {k: [] for k in parse_mod.RAW_COL_NAMES}
-            l_url, l_source, l_kind = [], [], []
-            l_page, l_slot, l_dom, l_href = [], [], [], []
-
-            rows = pdf.to_dict("records")
-            for row in rows:
+        for batch in batches:
+            # Page rows carry the input columns as-is plus the fetch result
+            # and the 21 raw parse columns. A link row carries only its
+            # parent's _LINK_PARENT_COLS + dom_idx + href: the other fields
+            # are null, filled once per batch rather than per link.
+            page = batch.to_pydict()
+            n_p = batch.num_rows
+            page["row_kind"] = ["page"] * n_p
+            page["fetch_status"], page["fetched_at_ms"] = [], []
+            page.update((k, []) for k in parse_mod.RAW_COL_NAMES)
+            parent, dom_idx, href = [], [], []
+            for j, (url_canon, domain, salt, kind, attempts) in enumerate(zip(
+                page["url_canon"], page["domain"], page["domain_salt"],
+                page["kind"], page["attempts"],
+            )):
                 html, status, at = fetch_row(
-                    row["url_canon"], row["domain"], row["domain_salt"],
-                    row["kind"], row["attempts"],
+                    url_canon, domain, salt, kind, attempts
                 )
-                # the page row (always)
-                for c in _META_COLS:
-                    meta[c].append(row[c])
-                st.append(status)
-                at_ms.append(at)
-                if status == FETCH_OK and row["kind"] == "offer":
-                    parse_mod.append_parsed_offer(raw, html)
-                else:
-                    # parse_ok=False, all raw fields null
-                    parse_mod.append_parsed_offer(raw, None)
-                # link rows (OK listing/investment pages)
-                if (
-                    status == FETCH_OK
-                    and row["kind"] in ("listing", "investment")
-                    and html is not None
-                ):
-                    for i, link in enumerate(
-                        parse_mod._HREF_RE.findall(html)
-                    ):
-                        l_url.append(row["url"])
-                        l_source.append(row["source"])
-                        l_kind.append(row["kind"])
-                        l_page.append(row["page_idx"])
-                        l_slot.append(row["slot"])
-                        l_dom.append(i)
-                        l_href.append(link)
+                page["fetch_status"].append(status)
+                page["fetched_at_ms"].append(at)
+                ok = status == FETCH_OK and html is not None
+                # parse_ok=False, all raw fields null unless an OK offer
+                parse_mod.append_parsed_offer(
+                    page, html if ok and kind == "offer" else None
+                )
+                if ok and kind in ("listing", "investment"):
+                    links = parse_mod._HREF_RE.findall(html)
+                    parent.extend([j] * len(links))
+                    dom_idx.extend(range(len(links)))
+                    href.extend(links)
 
-            n_p, n_l = len(st), len(l_href)
-            none_l = [None] * n_l
-            raw["parse_ok"].extend([False] * n_l)
-            for k in parse_mod.RAW_COL_NAMES:
-                if k != "parse_ok":
-                    raw[k].extend(none_l)
-            out = {
-                "row_kind": pd.Series(
-                    ["page"] * n_p + ["link"] * n_l, dtype="object"
-                ),
-                "url": pd.Series(meta["url"] + l_url, dtype="object"),
-                "url_canon": pd.Series(
-                    meta["url_canon"] + none_l, dtype="object"
-                ),
-                # nullable Int64: a float64 fallback would corrupt 64-bit
-                # hashes
-                "url_hash64": pd.Series(
-                    meta["url_hash64"] + none_l, dtype="Int64"
-                ),
-                "source": pd.Series(meta["source"] + l_source, dtype="object"),
-                "domain": pd.Series(meta["domain"] + none_l, dtype="object"),
-                "domain_salt": pd.Series(
-                    meta["domain_salt"] + none_l, dtype="object"
-                ),
-                "kind": pd.Series(meta["kind"] + l_kind, dtype="object"),
-                "page_idx": pd.Series(meta["page_idx"] + l_page),
-                "slot": pd.Series(meta["slot"] + l_slot),
-                "sub_slot": pd.Series(
-                    meta["sub_slot"] + none_l, dtype="Int32"
-                ),
-                "attempts": pd.Series(
-                    meta["attempts"] + none_l, dtype="Int32"
-                ),
-                "fetch_status": pd.Series(
-                    st + none_l, dtype="object"
-                ),
-                "fetched_at_ms": pd.Series(
-                    at_ms + [float("nan")] * n_l, dtype="float64"
-                ),
-                "dom_idx": pd.Series(([None] * n_p) + l_dom, dtype="Int32"),
-                "href": pd.Series(([None] * n_p) + l_href, dtype="object"),
-                **parse_mod.raw_cols_to_series(raw),
-            }
-            yield pd.DataFrame(out)
+            n_l = len(href)
+            link = {c: [page[c][j] for j in parent] for c in _LINK_PARENT_COLS}
+            link.update(
+                row_kind=["link"] * n_l, dom_idx=dom_idx, href=href,
+                parse_ok=[False] * n_l,
+            )
+            none_p, none_l = [None] * n_p, [None] * n_l
+            yield pa.RecordBatch.from_pydict(
+                {
+                    c: page.get(c, none_p) + link.get(c, none_l)
+                    for c in schema.names
+                },
+                schema=schema,
+            )
 
     return fused_batches
 
@@ -410,5 +381,5 @@ def fetch_parse(
     return (
         frontier_batch.select(*_META_COLS)
         .repartition(n_part, F.col("domain_salt"))
-        .mapInPandas(stage, schema=FUSED_FIELDS)
+        .mapInArrow(stage, schema=FUSED_FIELDS)
     )

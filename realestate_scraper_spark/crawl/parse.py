@@ -9,6 +9,8 @@ per page in place of the reference's per-URL BeautifulSoup calls:
 - :func:`append_parsed_offer` — offer HTML → raw field values. Implements
   the reference's merge cascade LD+JSON → ``__NEXT_DATA__`` → CSS fallback
   (otodom.py:640-653): each extractor fills only fields still missing.
+  Values are plain Python (``None`` when missing), appended to column
+  lists that the fused stage turns into one Arrow batch as-is.
 
 Everything downstream of the fused stage (reconciliation F17/F18, bbox gate
 P5, completeness gate P2, offer-id extraction F5, photo explode W1/W2) is
@@ -19,8 +21,6 @@ from __future__ import annotations
 
 import json
 import re
-
-import pandas as pd
 
 OFFER_FIELDS = (
     "url string, url_canon string, source string, page_idx int, slot int, "
@@ -309,18 +309,3 @@ def append_parsed_offer(cols: dict[str, list], html: str | None) -> None:
     cols["raw_features"].append(
         [str(x) for x in feats] if feats is not None else None
     )
-
-
-def raw_cols_to_series(cols: dict[str, list]) -> dict[str, pd.Series]:
-    """Typed pandas Series for the 21 raw parse columns (nullable ints as
-    pandas Int32 so missing values survive Arrow)."""
-    dtypes = {
-        "parse_ok": "bool", "raw_price": "float64", "raw_ppm2": "float64",
-        "raw_area": "float64", "raw_lat": "float64", "raw_lon": "float64",
-        "raw_rooms": "Int32", "raw_floor": "Int32", "raw_floors": "Int32",
-        "raw_year": "Int32",
-    }
-    return {
-        k: pd.Series(v, dtype=dtypes.get(k, "object"))
-        for k, v in cols.items()
-    }

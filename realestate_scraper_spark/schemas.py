@@ -8,7 +8,6 @@ schema-on-write tables replacing its append-only CSVs:
 - offers_wide   ← storage 20-col      (scrapper/core/storage.py:13-20)
 - photos        ← photos.csv          (scrapper/adapters/otodom.py:818-822)
 - images        ← image blobs + meta  (BASELINE.json input_hint, non-negotiable)
-- checkpoint    ← *_state.json        (scrapper/cli.py:128-139, 786-813)
 - metrics       ← JSONL log events    (scrapper/core/log.py:10-27)
 """
 
@@ -141,20 +140,6 @@ IMAGES_SCHEMA = T.StructType(
         T.StructField("fmt", T.StringType(), False),
         T.StructField("caption", T.StringType(), False),
         T.StructField("phash", T.LongType(), False),
-    ]
-)
-
-# -------------------------------------------------------------- checkpoint
-# Replaces {source}_live_all_state.json + done.txt (scrapper/cli.py:707-813).
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("region", T.StringType(), False),
-        T.StructField("done", T.BooleanType(), False),
-        T.StructField("last_page_done", T.IntegerType(), False),
-        T.StructField("stop_reason", T.StringType(), True),
-        T.StructField("processed_offers_last_run", T.LongType(), False),
-        T.StructField("round", T.IntegerType(), False),
     ]
 )
 

@@ -11,11 +11,13 @@ same write discipline, toy-scale implementation —
 - the manifest records per-append lineage: round, stage, row count, snapshot
   id — the "per-partition lineage manifests" of the north_rule (file-level
   lineage; Iceberg would track per-data-file stats natively);
-- the manifest also records each snapshot's schema (``df.schema`` at write
-  time), as Iceberg table metadata does, and every read scans with it: no
-  Spark job infers a schema from footers, and a directory partition column
-  reads back with its written type (a boolean stays boolean). An entry
-  written before schemas were recorded is still read with inference;
+- the manifest also records the table's schema once (``df.schema`` of the
+  first append, replaced by ``overwrite``), as Iceberg table metadata does,
+  and every read scans with it: no Spark job infers a schema from footers,
+  and a directory partition column reads back with its written type (a
+  boolean stays boolean). An append whose schema differs in anything but
+  nullability raises instead of mixing schemas. A manifest written before
+  schemas were recorded is still read with inference;
 - reads list committed snapshot dirs only, so a crashed half-written append
   is invisible (snapshot isolation for a single writer).
 
@@ -28,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import threading
 import uuid
@@ -53,19 +56,28 @@ def _rows_from_footers(path: str) -> int:
     return total
 
 
-def _entry(snap_id, path, rows, round_idx, stage, df: DataFrame) -> dict:
+def _entry(snap_id, path, rows, round_idx, stage) -> dict:
     return {"id": snap_id, "path": path, "rows": rows, "round": round_idx,
-            "stage": stage, "schema": df.schema.json()}
+            "stage": stage}
 
 
-def _scan(spark: SparkSession, entry: dict) -> DataFrame:
-    """Scan one snapshot with its recorded schema (no inference job); an
-    entry written before the manifest recorded schemas infers it."""
+# the nullability flags of a schema's compact JSON form (StructType.json())
+_NULLABILITY = re.compile(
+    r'"(?:nullable|containsNull|valueContainsNull)":(?:true|false)'
+)
+
+
+def _same_but_nullability(a: str, b: str) -> bool:
+    return _NULLABILITY.sub("", a) == _NULLABILITY.sub("", b)
+
+
+def _scan(spark: SparkSession, path: str, schema: str | None) -> DataFrame:
+    """Scan one snapshot with the table's recorded schema (no inference
+    job); a manifest written before schemas were recorded infers it."""
     reader = spark.read
-    if "schema" in entry:
-        schema = StructType.fromJson(json.loads(entry["schema"]))
-        reader = reader.schema(schema)
-    return reader.parquet(entry["path"])
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(schema)))
+    return reader.parquet(path)
 
 
 class ParquetTable:
@@ -132,9 +144,18 @@ class ParquetTable:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
         rows = _rows_from_footers(path)
+        schema = df.schema.json()
         with self._commit_lock:
             m = self._manifest()
-            m["snapshots"].append(_entry(snap_id, path, rows, round_idx, stage, df))
+            if "schema" not in m:
+                if not m["snapshots"]:
+                    m["schema"] = schema
+            elif not _same_but_nullability(m["schema"], schema):
+                raise ValueError(
+                    f"append to {self.name} has schema {schema}, "
+                    f"the table has {m['schema']}"
+                )
+            m["snapshots"].append(_entry(snap_id, path, rows, round_idx, stage))
             self._commit(m)
         return rows, path
 
@@ -146,31 +167,37 @@ class ParquetTable:
         df.write.mode("overwrite").parquet(path)
         rows = _rows_from_footers(path)
         with self._commit_lock:
-            self._commit(
-                {"snapshots": [_entry(snap_id, path, rows, round_idx, stage, df)]}
-            )
+            self._commit({
+                "schema": df.schema.json(),
+                "snapshots": [_entry(snap_id, path, rows, round_idx, stage)],
+            })
             self._snap_counter = 1
         for p in old:
             shutil.rmtree(p, ignore_errors=True)
         return rows
 
-    def _live(self) -> list[dict]:
+    @staticmethod
+    def _live(m: dict) -> list[dict]:
         # zero-row snapshots have no parquet files to scan — the manifest
         # row count lets reads skip them
-        return [s for s in self._manifest()["snapshots"] if s["rows"] > 0]
+        return [s for s in m["snapshots"] if s["rows"] > 0]
+
+    def _scans(self, spark: SparkSession) -> list[DataFrame]:
+        """One scan per live snapshot, all from one manifest read."""
+        m = self._manifest()
+        return [_scan(spark, s["path"], m.get("schema")) for s in self._live(m)]
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         """Union of the committed snapshots. Snapshots may be individually
         partitioned (k=v subdirs); one multi-path scan would trip partition
         discovery, so each snapshot is its own scan (Iceberg reads via
         manifests and has no such issue)."""
-        dfs = [_scan(spark, s) for s in self._live()]
+        dfs = self._scans(spark)
         return reduce(DataFrame.unionByName, dfs) if dfs else None
 
     def read_snapshot(self, spark: SparkSession, path: str) -> DataFrame:
         """One committed snapshot (a path ``append_with_path`` returned)."""
-        entry = next(s for s in self._manifest()["snapshots"] if s["path"] == path)
-        return _scan(spark, entry)
+        return _scan(spark, path, self._manifest().get("schema"))
 
     def read_versioned(self, spark: SparkSession) -> "DataFrame | None":
         """Union of committed snapshots with a ``_seq`` commit-order column.
@@ -181,8 +208,8 @@ class ParquetTable:
         over ``_seq``. Compaction (overwrite with the reconciled view) resets
         the history to one snapshot."""
         dfs = [
-            _scan(spark, s).withColumn("_seq", F.lit(i))
-            for i, s in enumerate(self._live())
+            df.withColumn("_seq", F.lit(i))
+            for i, df in enumerate(self._scans(spark))
         ]
         return reduce(DataFrame.unionByName, dfs) if dfs else None
 
@@ -190,7 +217,7 @@ class ParquetTable:
         """Data paths of committed snapshots, optionally filtered by stage."""
         return [
             s["path"]
-            for s in self._live()
+            for s in self._live(self._manifest())
             if stages is None or s["stage"] in stages
         ]
 

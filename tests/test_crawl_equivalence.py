@@ -5,6 +5,7 @@ equality of parsed offers vs the golden expectations.
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
@@ -171,7 +172,7 @@ def test_images_join_photos(engine_run, corpus, spark):
 
 def test_checkpoint_and_metrics_written(engine_run, spark):
     eng, stats = engine_run
-    cp = {r["source"]: r.asDict() for r in eng.checkpoint_df().collect()}
+    cp = json.loads(Path(eng.checkpoint_path).read_text())
     assert set(cp) == {"otodom", "morizon", "gratka", "trojmiasto"}
     for src, row in cp.items():
         assert row["done"], src
@@ -209,7 +210,8 @@ def test_kill_and_resume_equals_uninterrupted(spark, corpus, tmp_path_factory, e
         f.write(b"not a filter")
 
     eng2 = CrawlEngine.resume(spark, run_dir, graph, n_salts=2)
-    assert eng2.checkpoint_df().count() == len(state)
+    resumed_state = json.loads(Path(eng2.checkpoint_path).read_text())
+    assert resumed_state.keys() == state.keys()
     eng2.run(max_rounds=20)
 
     base, _ = engine_run
@@ -246,18 +248,18 @@ def test_resume_preserves_fetch_fail_state(spark, tmp_path):
     eng = CrawlEngine(spark, run_dir, graph, n_salts=2)
     eng.seed(seed_urls())
     eng.run(max_rounds=8)
-    cp = {r["source"]: r.asDict() for r in eng.checkpoint_df().collect()}
+    cp = json.loads(Path(eng.checkpoint_path).read_text())
     assert cp["morizon"]["stop_reason"] == "fetch_fail"
 
     eng2 = CrawlEngine.resume(spark, run_dir, graph, n_salts=2)
     eng2.run(max_rounds=8)  # nothing pending — must not stamp done/no_links
-    cp = {r["source"]: r.asDict() for r in eng2.checkpoint_df().collect()}
+    cp = json.loads(Path(eng2.checkpoint_path).read_text())
     assert cp["morizon"]["stop_reason"] == "fetch_fail"
     assert not cp["morizon"]["done"]
 
     eng2.retry_failed()
     eng2.run(max_rounds=8)
-    cp = {r["source"]: r.asDict() for r in eng2.checkpoint_df().collect()}
+    cp = json.loads(Path(eng2.checkpoint_path).read_text())
     assert cp["morizon"]["done"]
     assert cp["morizon"]["last_page_done"] == 2
 
@@ -493,6 +495,86 @@ def test_fused_stage_closure_stays_small(spark):
         )
     finally:
         bc.unpersist()
+
+
+def test_fused_stage_types_round_trip(spark, corpus):
+    """The fused stage's Arrow output reads back typed through Spark: a
+    64-bit hash above 2**53 stays exact on its page row, link rows read
+    NULL (not 0 or NaN) in every page-only field, page rows read NULL in
+    the link-only fields, and the photo structs and feature arrays of an
+    offer page come back as the parse cascade produced them."""
+    from realestate_scraper_spark.crawl import fetch as fetch_mod
+    from realestate_scraper_spark.crawl import parse as parse_mod
+
+    def parsed(html):
+        cols = {k: [] for k in parse_mod.RAW_COL_NAMES}
+        parse_mod.append_parsed_offer(cols, html)
+        return {k: v[0] for k, v in cols.items()}
+
+    _, _, graph = corpus
+    offer = next(
+        r for r in graph
+        if r["kind"] == "offer" and len(parsed(r["html"])["photo_urls"]) >= 2
+    )
+    want = parsed(offer["html"])
+    assert want["raw_features"] and want["raw_rooms"] is not None
+    listing_html = '<a href="/offer-a">a</a> <a href="/offer-b">b</a>'
+    store = spark.sparkContext.broadcast({
+        "https://t.example/list?page=1": (listing_html, True, 0, False, False, 0),
+        "https://t.example/offer": (offer["html"], True, 0, False, False, 0),
+    })
+    big = [2**53 + 1, 2**63 - 3, -(2**62) - 5]
+    fr = spark.createDataFrame(
+        [
+            ("u-list", "https://t.example/list?page=1", big[0], "t",
+             "t.example", "t.example#0", "listing", 1, 0, 0, 0),
+            ("u-offer", "https://t.example/offer", big[1], "t",
+             "t.example", "t.example#0", "offer", 1, 3, 2, 1),
+            ("u-gone", "https://t.example/gone", big[2], "t",
+             "t.example", "t.example#0", "offer", 1, 4, 0, 0),
+        ],
+        "url string, url_canon string, url_hash64 long, source string, "
+        "domain string, domain_salt string, kind string, page_idx int, "
+        "slot int, sub_slot int, attempts int",
+    )
+    try:
+        rows = fetch_mod.fetch_parse(fr, store, n_salts=1).collect()
+    finally:
+        store.unpersist()
+    pages = {r["url"]: r for r in rows if r["row_kind"] == "page"}
+    links = sorted(
+        (r for r in rows if r["row_kind"] == "link"), key=lambda r: r["dom_idx"]
+    )
+
+    assert [pages[u]["url_hash64"] for u in ("u-list", "u-offer", "u-gone")] == big
+    assert [pages[u]["fetch_status"] for u in ("u-list", "u-offer", "u-gone")] == [
+        fetch_mod.FETCH_OK, fetch_mod.FETCH_OK, fetch_mod.FETCH_MISSING,
+    ]
+    for r in pages.values():
+        assert r["dom_idx"] is None and r["href"] is None
+        assert r["fetched_at_ms"] is not None
+    assert (pages["u-offer"]["sub_slot"], pages["u-offer"]["attempts"]) == (2, 1)
+
+    offer_row = pages["u-offer"].asDict(recursive=True)
+    assert {k: offer_row[k] for k in parse_mod.RAW_COL_NAMES} == want
+    for u in ("u-list", "u-gone"):
+        assert pages[u]["parse_ok"] is False and pages[u]["photo_urls"] == []
+        assert pages[u]["raw_rooms"] is None and pages[u]["raw_features"] is None
+
+    assert [(r["dom_idx"], r["href"]) for r in links] == [
+        (0, "/offer-a"), (1, "/offer-b"),
+    ]
+    for r in links:
+        assert (r["url"], r["source"], r["kind"], r["page_idx"], r["slot"]) == (
+            "u-list", "t", "listing", 1, 0,
+        )
+        assert r["parse_ok"] is False
+        page_only = (
+            "url_canon", "url_hash64", "domain", "domain_salt", "sub_slot",
+            "attempts", "fetch_status", "fetched_at_ms",
+            *(k for k in parse_mod.RAW_COL_NAMES if k != "parse_ok"),
+        )
+        assert {k: r[k] for k in page_only} == dict.fromkeys(page_only)
 
 
 def test_every_crawl_job_is_phase_tagged(crawl_with_jobs):

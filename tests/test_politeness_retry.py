@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from realestate_scraper_spark.crawl.engine import CrawlEngine
@@ -251,14 +254,14 @@ def test_fetch_fail_region_not_marked_done(spark, tmp_path):
     eng = CrawlEngine(spark, str(tmp_path / "ff"), graph, n_salts=2)
     eng.seed(seed_urls())
     eng.run(max_rounds=8)
-    cp = {r["source"]: r.asDict() for r in eng.checkpoint_df().collect()}
+    cp = json.loads(Path(eng.checkpoint_path).read_text())
     assert cp["morizon"]["stop_reason"] == "fetch_fail"
     assert not cp["morizon"]["done"]
     assert cp["otodom"]["done"] and cp["otodom"]["stop_reason"] == "no_links"
 
     eng.retry_failed()
     eng.run(max_rounds=8)
-    cp = {r["source"]: r.asDict() for r in eng.checkpoint_df().collect()}
+    cp = json.loads(Path(eng.checkpoint_path).read_text())
     assert cp["morizon"]["done"]
     assert cp["morizon"]["last_page_done"] == 2
 

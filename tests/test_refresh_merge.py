@@ -4,6 +4,9 @@ a domain across shards."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from realestate_scraper_spark.crawl.engine import CrawlEngine
@@ -182,7 +185,7 @@ def test_pagination_lookahead_fewer_rounds_same_offers(spark, tmp_path):
     }
     assert fa == fb
 
-    cp = {r["source"]: r.asDict() for r in e1.checkpoint_df().collect()}
+    cp = json.loads(Path(e1.checkpoint_path).read_text())
     for src, row in cp.items():
         assert row["done"] and row["stop_reason"] == "no_links", (src, row)
         assert row["last_page_done"] == 8, src

@@ -21,8 +21,13 @@ from pyspark.sql import functions as F
 from realestate_scraper_spark.crawl.engine import CrawlEngine
 from realestate_scraper_spark.sources.synth import build_corpus, seed_urls
 
-_MAP_IN_PANDAS_FN = re.compile(
-    r"^\(\d+\) MapInPandas\n(?:.*\n)*?Arguments: (\w+)\(", re.M
+# the header line of every physical node that runs Python: per-row and
+# Arrow UDF evaluation, the pandas and Arrow map/group/cogroup/window
+# operators, and UDTFs
+_PYTHON_NODE = r"^\(\d+\) (\w*(?:EvalPython|InPandas|InArrow|PythonUDTF)\w*)"
+# that node with the Python function of its ``Arguments:`` line
+_PYTHON_NODE_FN = re.compile(
+    _PYTHON_NODE + r".*\n(?:.*\n)*?Arguments: (\w+)\(", re.M
 )
 
 
@@ -57,12 +62,11 @@ def test_run_plans_keep_python_to_fused_fetch_parse(crawl):
     assert any(desc == "insert_deltas" for desc, _ in during.values())
     fused = 0
     for eid, (desc, plan) in sorted(during.items()):
-        for op in ("ArrowEvalPython", "FlatMapGroupsInPandas"):
-            assert op not in plan, f"execution {eid} ({desc}) runs {op}"
-        fns = _MAP_IN_PANDAS_FN.findall(plan)
-        assert len(fns) == plan.count(") MapInPandas\n"), plan
-        assert set(fns) <= {"fused_batches"}, (eid, desc, fns)
-        fused += len(fns)
+        assert "MapInPandas" not in plan, f"execution {eid} ({desc})"
+        nodes = _PYTHON_NODE_FN.findall(plan)
+        assert len(nodes) == len(re.findall(_PYTHON_NODE, plan, re.M)), plan
+        assert set(nodes) <= {("MapInArrow", "fused_batches")}, (eid, desc, nodes)
+        fused += len(nodes)
     assert fused > 0, "the fused fetch+parse stage never showed up"
 
 

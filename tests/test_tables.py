@@ -1,4 +1,4 @@
-"""ParquetTable: the manifest records each snapshot's schema, and reads scan
+"""ParquetTable: the manifest records the table's schema once, and reads scan
 with it instead of inferring one from parquet footers."""
 
 from __future__ import annotations
@@ -6,6 +6,9 @@ from __future__ import annotations
 import json
 import sys
 from pathlib import Path
+
+import pytest
+from pyspark.sql import functions as F
 
 from realestate_scraper_spark.sources.tables import ParquetTable
 
@@ -38,7 +41,8 @@ def _rows(df) -> list[tuple]:
 
 def test_reads_scan_with_recorded_schema_and_submit_no_job(spark, tmp_path):
     t = _three_snapshots(spark, tmp_path)
-    assert all("schema" in s for s in t.lineage())
+    assert "schema" in t._manifest()
+    assert not any("schema" in s for s in t.lineage())
     sc = spark.sparkContext
     before = job_ids(sc)
     plain = t.read(spark)
@@ -60,16 +64,47 @@ def test_reads_scan_with_recorded_schema_and_submit_no_job(spark, tmp_path):
 
 def test_entry_without_schema_is_still_read(spark, tmp_path):
     """A run dir written before the manifest recorded schemas: the scan
-    infers the schema, as it always did."""
+    infers the schema, as it always did, and a later append records none."""
     t = _three_snapshots(spark, tmp_path)
     with open(t._manifest_path) as f:
         manifest = json.load(f)
-    for s in manifest["snapshots"]:
-        del s["schema"]
+    del manifest["schema"]
     t._commit(manifest)
+    t.append(spark.createDataFrame([], SCHEMA))
+    assert "schema" not in t._manifest()
 
     expected = sorted(r for rows in ROWS for r in rows)
     assert _rows(t.read(spark)) == expected
     # the inferred read types a directory partition column as a string
     middle = t.read_snapshot(spark, t.snapshot_paths()[1])
     assert dict(middle.dtypes)["ok"] == "string"
+
+
+def test_append_with_another_schema_raises(spark, tmp_path):
+    """Appends may differ from the table's schema only in nullability."""
+    t = ParquetTable(str(tmp_path), "t")
+    t.append(spark.createDataFrame(ROWS[0], SCHEMA))
+    with pytest.raises(ValueError, match="schema"):
+        t.append(spark.createDataFrame([(7, "g", 1)], "k int, v string, ok int"))
+    with pytest.raises(ValueError, match="schema"):
+        t.append(spark.createDataFrame([("h", 8, True)], "v string, k int, ok boolean"))
+    assert len(t.lineage()) == 1
+
+    # a NOT NULL column appends to the nullable table and reads back
+    strict = spark.createDataFrame(ROWS[1], SCHEMA).withColumn(
+        "k", F.coalesce("k", F.lit(0))
+    )
+    assert not strict.schema["k"].nullable
+    t.append(strict)
+    assert _rows(t.read(spark)) == sorted(ROWS[0] + ROWS[1])
+
+
+def test_overwrite_replaces_the_schema(spark, tmp_path):
+    t = _three_snapshots(spark, tmp_path)
+    t.overwrite(spark.createDataFrame([(1, 2.5)], "k int, w double"))
+    df = t.read(spark)
+    assert df.dtypes == [("k", "int"), ("w", "double")]
+    assert [tuple(r) for r in df.collect()] == [(1, 2.5)]
+    t.append(spark.createDataFrame([(2, None)], "k int, w double"))
+    with pytest.raises(ValueError, match="schema"):
+        t.append(spark.createDataFrame(ROWS[0], SCHEMA))
